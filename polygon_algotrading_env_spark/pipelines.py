@@ -94,10 +94,10 @@ def ingest_aggregates(
       ceiling, reference README.md:20) is the bottleneck, not the driver.
     - ``page_store``: LARGE BACKFILLS. Pages already landed under
       ``{store}/{symbol}/page-N.json`` (flat-file dumps, an HTTP shim) are
-      read by the distributed ``PolygonPagesDataSource`` — one task per
-      symbol, per-symbol bookmark watermarks shipped to executors as a
-      serialized option, no driver-side row list. A month × 5000-ticker
-      backfill never fits a driver list; this route is why.
+      read by the distributed ``PolygonPagesDataSource`` — whole symbols
+      packed into a few tasks, per-symbol bookmark watermarks shipped to
+      executors as a serialized option, no driver-side row list. A month
+      × 5000-ticker backfill never fits a driver list; this route is why.
     """
     store = BookmarkStore(f"{lake_root}/bookmarks", key_cols=["ticker", "adjusted"])
     bookmarks = store.load(spark)

@@ -9,7 +9,8 @@ Reference parity (SURVEY.md §2.1):
 - S2: ``next_url``-cursor pagination
   (``reference_data_etl.py:36-55``, ``reference_endpoints_etl.py:28-53``).
 - S3: typed CSV re-read (``old_source_op.py:130``).
-- S6: JSON scan (``dag_aggregates_etl.py:128-150``).
+- S6: JSON object scan (``dag_aggregates_etl.py:128-150``) — served by
+  the page store in ``restsource.py``.
 
 The REST scans take an injectable ``fetch`` callable (the network layer is
 environment-specific and stubbed in tests), but the cursor/termination/
@@ -56,16 +57,6 @@ def read_jdbc(
     for k, v in (properties or {}).items():
         reader = reader.option(k, v)
     return reader.load()
-
-
-def read_json_typed(
-    spark: SparkSession, path: str, schema: StructType | str | None = None
-) -> DataFrame:
-    """S6: JSON scan (bronze re-read)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
 
 
 class FetchRetriesExhausted(RuntimeError):

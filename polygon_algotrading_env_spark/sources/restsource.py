@@ -2,11 +2,13 @@
 ``spark.dataSource.register`` — the native form of SURVEY.md §2.1 S1).
 
 Unlike the driver-side ``paginate_date_cursor`` landing path (right for
-one rate-limited API), a DataSource distributes the scan: one input
-partition per symbol, each executor runs the cursor loop for its symbols.
-That is exactly the reference's ticker fan-out (``main.py:40-44``,
-``dag_aggregates_etl.py:363-366``) executed as Spark tasks instead of
-sequential ECS containers.
+one rate-limited API), a DataSource distributes the scan: whole symbols
+are packed, in sorted order, into input partitions of up to
+``PAGES_PER_TASK`` unread pages, and each executor task runs the cursor
+loop for its symbols in turn. That is the reference's ticker fan-out
+(``main.py:40-44``, ``dag_aggregates_etl.py:363-366``) executed as Spark
+tasks instead of sequential ECS containers, with many tickers to a task
+because a Python task's fixed set-up cost outweighs reading a few pages.
 
 The endpoint is abstracted as a *page store*: ``{root}/{symbol}/page-N.json``
 objects, each ``{"results": [...]}``. The store speaks ANY filesystem
@@ -247,12 +249,61 @@ class PageStore:
         return True
 
 
-class SymbolPartition(InputPartition):
-    def __init__(self, symbol: str):
-        self.symbol = symbol
+# Unread pages one Python read task covers. A Python task pays about 0.2 s
+# of worker CPU before it reads a byte (ARCHITECTURE.md, "Python is
+# quarantined"), and reading a 500-tick page takes about 2 ms, so a task
+# must hold about 0.2 s / 2 ms = 100 pages before its reads cost as much as
+# its set-up. Rounded up to 128: set-up is then under half of a full task,
+# and a backfill of thousands of pages still spreads over many tasks.
+PAGES_PER_TASK = 128
 
 
-class PolygonPagesReader(DataSourceReader):
+def _pack(ranges: list[tuple[str, int, int]]) -> list[list[tuple[str, int, int]]]:
+    """Group ``(symbol, start_page, end_page)`` ranges, in their given
+    order, into partitions of at most ``PAGES_PER_TASK`` pages, skipping
+    empty ranges. A range is never split: its monotonic guard is seeded
+    from the last record of the page before it, which matches a sequential
+    read only when the pages are in time order, so one task reads a
+    symbol's pages in turn. A range longer than the cap gets a partition
+    of its own."""
+    groups: list[list[tuple[str, int, int]]] = []
+    group: list[tuple[str, int, int]] = []
+    size = 0
+    for rng in ranges:
+        n = rng[2] - rng[1]
+        if n <= 0:
+            continue
+        if group and size + n > PAGES_PER_TASK:
+            groups.append(group)
+            group, size = [], 0
+        group.append(rng)
+        size += n
+    if group:
+        groups.append(group)
+    return groups
+
+
+class PagesPartition(InputPartition):
+    """One read task: ``(symbol, start_page, end_page)`` ranges read in
+    order. ``pages`` maps each symbol to its page names when the planner
+    listed them (batch reads); stream tasks list the store themselves,
+    because stream offsets hold page counts only."""
+
+    def __init__(
+        self,
+        ranges: list[tuple[str, int, int]],
+        pages: dict[str, list[str]] | None = None,
+    ):
+        self.ranges = ranges
+        self.pages = pages
+
+
+class _PageScan:
+    """Options and the per-symbol page loop the batch and stream readers
+    share."""
+
+    page_gap_ms = 0
+
     def __init__(self, schema: StructType, options: dict):
         self.schema = schema
         self.store = PageStore(options["path"])
@@ -262,24 +313,43 @@ class PolygonPagesReader(DataSourceReader):
         )
         # Per-symbol watermarks (JSON {symbol: max_ts}) — options are
         # strings, so the bookmark table travels serialized; falls back to
-        # the global lastentryts for symbols not in the map.
+        # the global lastentryts for symbols not in the map. A stream skips
+        # records at or below them even on its FIRST batch: checkpointed
+        # page offsets only protect restarts of the same query, and a
+        # brand-new stream over a store with history needs the bookmark to
+        # avoid re-emitting already-landed rows.
         self.wm_by_symbol: dict[str, int] = {
             k: int(v)
             for k, v in json.loads(options.get("lastentrybysymbol", "{}")).items()
         }
 
-    def partitions(self):
-        symbols = self.symbols or self.store.list_symbols()
-        return [SymbolPartition(s) for s in symbols]
-
-    def read(self, partition: SymbolPartition) -> Iterator[tuple]:
+    def _scan(
+        self,
+        symbol: str,
+        pages: list[str],
+        start: int,
+        end: int,
+        stop_at_empty: bool,
+    ) -> Iterator[tuple]:
+        """Rows of pages ``pages[start:end]`` of one symbol. Each range has
+        its own watermark and monotonic guard; a range starting at page
+        N > 0 seeds the guard from the last record of page N-1, so the
+        overlap duplicate that straddles a batch boundary is dropped (one
+        extra page read, no cross-batch state). ``stop_at_empty`` ends the
+        symbol at its first empty page (the batch scan's termination rule);
+        a stream reads on, since its offsets already cover the range."""
         fields = [f.name for f in self.schema.fields]
-        watermark = self.wm_by_symbol.get(partition.symbol, self.last_entry_ts)
+        watermark = self.wm_by_symbol.get(symbol, self.last_entry_ts)
         prev_last_t = None
-        for page_name in self.store.list_pages(partition.symbol):
-            page = self.store.read_page(partition.symbol, page_name)
-            results = page.get("results") or []
-            if not results:
+        if start > 0:
+            prior = self.store.read_page(symbol, pages[start - 1]).get("results") or []
+            if prior:
+                prev_last_t = prior[-1]["t"]
+        for page_name in pages[start:end]:
+            if self.page_gap_ms:
+                time.sleep(self.page_gap_ms / 1000.0)
+            results = self.store.read_page(symbol, page_name).get("results") or []
+            if not results and stop_at_empty:
                 break  # termination rule 1: empty page
             for rec in results:
                 t = rec["t"]
@@ -288,18 +358,33 @@ class PolygonPagesReader(DataSourceReader):
                 if prev_last_t is not None and t <= prev_last_t:
                     continue  # monotonic guard (page-overlap dup)
                 prev_last_t = t
-                rec = {**rec, "ticker": partition.symbol}
+                rec = {**rec, "ticker": symbol}
                 yield tuple(rec.get(name) for name in fields)
 
 
-class PolygonStreamPartition(InputPartition):
-    def __init__(self, symbol: str, start_page: int, end_page: int):
-        self.symbol = symbol
-        self.start_page = start_page
-        self.end_page = end_page
+class PolygonPagesReader(_PageScan, DataSourceReader):
+    def partitions(self):
+        # Listing is metadata only and runs on the planner; tasks get the
+        # page names and only read.
+        pages = {
+            s: self.store.list_pages(s)
+            for s in sorted(self.symbols or self.store.list_symbols())
+        }
+        # Spark turns an empty list into one read(None) call, so a store
+        # with no pages plans one empty partition instead.
+        return [
+            PagesPartition(group, {s: pages[s] for s, _, _ in group})
+            for group in _pack([(s, 0, len(names)) for s, names in pages.items()])
+        ] or [PagesPartition([], {})]
+
+    def read(self, partition: PagesPartition) -> Iterator[tuple]:
+        for symbol, start, end in partition.ranges:
+            yield from self._scan(
+                symbol, partition.pages[symbol], start, end, stop_at_empty=True
+            )
 
 
-class PolygonPagesStreamReader(DataSourceStreamReader):
+class PolygonPagesStreamReader(_PageScan, DataSourceStreamReader):
     """Micro-batch streaming form of the paginated ingest — the native
     Structured Streaming replacement for the reference's daily
     Airflow→ECS incremental pull (``aggregates_etl.py:89-167``,
@@ -308,16 +393,18 @@ class PolygonPagesStreamReader(DataSourceStreamReader):
     OFFSETS are the checkpointed date-cursor: ``{"pages": {symbol:
     consumed_page_count}}``. ``latestOffset`` lists the page store on the
     driver (a metadata listing, no data read); ``partitions(start, end)``
-    plans ONE InputPartition per symbol with unread pages, and ``read``
-    runs executor-side — the same per-ticker fan-out as the batch reader,
-    so throughput scales with executors rather than the driver (unlike
-    ``SimpleDataSourceStreamReader``, which reads on the driver).
+    packs whole symbols with unread pages, in sorted order, into input
+    partitions of up to ``PAGES_PER_TASK`` pages, and ``read`` runs
+    executor-side — the same packing as the batch reader, so throughput
+    scales with executors rather than the driver (unlike
+    ``SimpleDataSourceStreamReader``, which reads on the driver), while a
+    micro-batch of a few pages costs one Python task, not one per symbol.
 
     Exactly-once comes from the offset contract: Spark checkpoints
     ``(start, end)`` per micro-batch and replays a failed batch with the
     SAME page range, and pages are immutable once written. The by-design
     page-overlap duplicate is dropped even when the overlap straddles a
-    batch boundary: a partition starting at page N > 0 seeds its
+    batch boundary: a symbol's range starting at page N > 0 seeds its
     monotonic guard from the last record of page N-1 (one extra page
     read, no cross-batch state).
 
@@ -326,9 +413,11 @@ class PolygonPagesStreamReader(DataSourceStreamReader):
     next_url loop (``aggregates_etl.py:152-166``).
 
     LIVE mode (``fetcher`` = importable ``module:attr`` path, or
-    ``fetcherpickle`` = :func:`encode_fetcher` payload): offsets still
-    cover only LANDED pages; after emitting its offset range, each task
-    pulls up to
+    ``fetcherpickle`` = :func:`encode_fetcher` payload) keeps ONE input
+    partition per symbol: there a task's cost is network waits and
+    pacing, and the per-ticker pull is the reference's contract. Offsets
+    still cover only LANDED pages; after emitting its offset range, each
+    task pulls up to
     ``maxpagespertrigger`` new pages for its symbol through
     ``fetch_with_retries`` (same bounded-retry/backoff envelope as the
     batch REST loop, readers.py) and lands them at the next page indices
@@ -345,21 +434,7 @@ class PolygonPagesStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, schema: StructType, options: dict):
-        self.schema = schema
-        self.store = PageStore(options["path"])
-        self.symbols = [s for s in options.get("symbols", "").split(",") if s]
-        self.last_entry_ts = (
-            int(options["lastentryts"]) if "lastentryts" in options else None
-        )
-        # Same per-symbol watermark map as the batch reader: records at or
-        # below a symbol's watermark are skipped even on the FIRST batch
-        # (checkpointed page offsets only protect restarts of the same
-        # query; a brand-new stream over a store with history needs the
-        # bookmark to avoid re-emitting already-landed rows).
-        self.wm_by_symbol: dict[str, int] = {
-            k: int(v)
-            for k, v in json.loads(options.get("lastentrybysymbol", "{}")).items()
-        }
+        super().__init__(schema, options)
         self.page_gap_ms = int(options.get("minpagegapms", "0"))
         self.fetch_page = _resolve_fetcher(options)
         if self.fetch_page is not None and not self.symbols:
@@ -385,49 +460,23 @@ class PolygonPagesStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict):
         consumed = start.get("pages", {})
-        out = []
-        for sym, end_p in sorted(end.get("pages", {}).items()):
-            start_p = int(consumed.get(sym, 0))
-            if int(end_p) > start_p or self.fetch_page is not None:
-                # Live mode plans a partition even with no unread pages:
-                # the task still runs the fetch side of the batch.
-                out.append(PolygonStreamPartition(sym, start_p, int(end_p)))
-        # A no-progress batch still needs a partition list; empty is valid.
-        return out
-
-    def read(self, partition: PolygonStreamPartition) -> Iterator[tuple]:
-        pages = self.store.list_pages(partition.symbol)
-        fields = [f.name for f in self.schema.fields]
-
-        watermark = self.wm_by_symbol.get(partition.symbol, self.last_entry_ts)
-        prev_last_t = None
-        if partition.start_page > 0:
-            # Seed the monotonic guard across the batch boundary: the
-            # overlap duplicate repeats the LAST record of the previous
-            # page, which a fresh guard would otherwise re-emit.
-            prior = self.store.read_page(
-                partition.symbol, pages[partition.start_page - 1]
-            ).get("results") or []
-            if prior:
-                prev_last_t = prior[-1]["t"]
-        for page_name in pages[partition.start_page : partition.end_page]:
-            if self.page_gap_ms:
-                time.sleep(self.page_gap_ms / 1000.0)
-            results = (
-                self.store.read_page(partition.symbol, page_name).get("results")
-                or []
-            )
-            for rec in results:
-                t = rec["t"]
-                if watermark is not None and t <= watermark:
-                    continue  # watermark guard
-                if prev_last_t is not None and t <= prev_last_t:
-                    continue  # monotonic guard (page-overlap dup)
-                prev_last_t = t
-                rec = {**rec, "ticker": partition.symbol}
-                yield tuple(rec.get(name) for name in fields)
+        ranges = [
+            (sym, int(consumed.get(sym, 0)), int(end_p))
+            for sym, end_p in sorted(end.get("pages", {}).items())
+        ]
         if self.fetch_page is not None:
-            self._land_new_pages(partition.symbol, len(pages))
+            # Live mode plans a partition even with no unread pages: the
+            # task still runs the fetch side of the batch.
+            return [PagesPartition([rng]) for rng in ranges]
+        # A no-progress batch still needs a partition list; empty is valid.
+        return [PagesPartition(group) for group in _pack(ranges)]
+
+    def read(self, partition: PagesPartition) -> Iterator[tuple]:
+        for symbol, start, end in partition.ranges:
+            pages = self.store.list_pages(symbol)
+            yield from self._scan(symbol, pages, start, end, stop_at_empty=False)
+            if self.fetch_page is not None:
+                self._land_new_pages(symbol, len(pages))
 
     def _land_new_pages(self, symbol: str, next_index: int) -> None:
         """Executor-side live pull: fetch up to ``maxpagespertrigger``

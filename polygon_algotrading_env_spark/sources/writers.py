@@ -5,7 +5,9 @@ reference's hand-rolled S3 key layouts.
 - K2 latest+history dual  — stable "latest" overwrite + timestamped history
                             append (reference_endpoints_etl.py:57-62,
                             aggregates_stocks_etl.py:90-93).
-- K3 dim overwrite        — full-refresh dimension (reference_data_etl.py:67).
+- K3 dim overwrite        — full-refresh dimension (reference_data_etl.py:67):
+                            the 'latest' side of the K2 dual write, or
+                            ``write_jdbc(mode='overwrite')``.
 - K4/K5 fact append       — incremental fact (aggregates_etl.py:171-177,
                             old_source_op.py:176).
 - K6 partitioned layout   — ``partitionBy`` replaces `{adjusted}/{ticker}`
@@ -43,11 +45,6 @@ def dual_write_latest_history(
     reference's latest/timestamped CSV pair)."""
     df.write.mode("overwrite").parquet(latest_path)
     df.write.mode("append").parquet(f"{history_path}/snapshot={snapshot_id}")
-
-
-def overwrite_dimension(df: DataFrame, path: str) -> None:
-    """K3: full-refresh dimension store (to_sql if_exists='replace')."""
-    df.write.mode("overwrite").parquet(path)
 
 
 def write_jdbc(

@@ -39,8 +39,8 @@ def test_datasource_distributed_scan(spark, page_root):
               df.groupBy("ticker").count().withColumnRenamed("count", "cnt").collect()}
     assert counts == {"SPY": 5, "TLT": 3}  # overlap deduped per partition
     assert df.schema["t"].dataType.simpleString() == "bigint"
-    # One input partition per symbol → the reference's per-ticker fan-out.
-    assert df.rdd.getNumPartitions() == 2
+    # Both symbols' 4 pages fit one packed read task (PAGES_PER_TASK).
+    assert df.rdd.getNumPartitions() == 1
 
 
 def test_datasource_symbol_selection_and_watermark(spark, page_root):
@@ -154,6 +154,154 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     # Third run with no new pages: no new rows, no re-emission.
     _run_stream(spark, root, ckpt, out)
     assert len(spark.read.parquet(out).collect()) == 6
+
+
+def _stream_reader(root, **options):
+    from pyspark.sql.types import StructType
+
+    from polygon_algotrading_env_spark.sources.restsource import (
+        PolygonPagesStreamReader,
+    )
+
+    return PolygonPagesStreamReader(StructType(), {"path": str(root), **options})
+
+
+def test_stream_partitions_pack_whole_symbols_under_page_cap(tmp_path):
+    """Packing needs no Spark: symbols in sorted order, whole, up to the
+    page cap per partition; an over-cap symbol alone; no-op symbols
+    skipped; the plan does not depend on the offset map's order."""
+    from polygon_algotrading_env_spark.sources.restsource import PAGES_PER_TASK
+
+    cap, half = PAGES_PER_TASK, PAGES_PER_TASK // 2
+    end = {"G": half - 2, "F": 3, "E": half, "D": 10, "C": cap + 5,
+           "B": half + 1, "A": half}
+    start = {"D": 10, "F": 1}
+    want = [
+        [("A", 0, half)],                 # A + B is one page over the cap
+        [("B", 0, half + 1)],
+        [("C", 0, cap + 5)],              # over the cap: a partition of its own
+        [("E", 0, half), ("F", 1, 3), ("G", 0, half - 2)],  # exactly the cap
+    ]                                     # D has no unread pages: skipped
+    reader = _stream_reader(tmp_path)
+    plan = [p.ranges for p in reader.partitions({"pages": start}, {"pages": end})]
+    assert plan == want
+    reordered = {"pages": dict(reversed(list(end.items())))}
+    assert [p.ranges for p in reader.partitions({"pages": start}, reordered)] == want
+    assert reader.partitions({"pages": end}, {"pages": end}) == []
+
+
+def test_stream_partitions_fetch_mode_one_per_symbol(tmp_path):
+    """Live fetch mode keeps one task per symbol, even a symbol with no
+    unread pages: that task still runs the symbol's fetch."""
+    from polygon_algotrading_env_spark.sources.restsource import encode_fetcher
+
+    reader = _stream_reader(
+        tmp_path,
+        symbols="SPY,TLT,QQQ",
+        fetcherpickle=encode_fetcher(lambda s, i: {"results": []}),
+    )
+    parts = reader.partitions(
+        {"pages": {"SPY": 1}}, {"pages": {"TLT": 2, "SPY": 1, "QQQ": 1}}
+    )
+    assert [p.ranges for p in parts] == [
+        [("QQQ", 0, 1)], [("SPY", 1, 1)], [("TLT", 0, 2)]
+    ]
+
+
+def test_batch_partitions_carry_listed_page_names(tmp_path):
+    """The batch planner lists pages once; tasks receive the names. A
+    symbol with no pages gets no partition."""
+    from pyspark.sql.types import StructType
+
+    from polygon_algotrading_env_spark.sources.restsource import (
+        PolygonPagesReader,
+    )
+
+    for p in range(3):
+        _write_page(tmp_path, "TLT", p, [_rec(p)])
+    _write_page(tmp_path, "SPY", 0, [_rec(0)])
+    os.makedirs(tmp_path / "EMPTY")
+    (part,) = PolygonPagesReader(StructType(), {"path": str(tmp_path)}).partitions()
+    assert part.ranges == [("SPY", 0, 1), ("TLT", 0, 3)]
+    assert part.pages == {
+        "SPY": ["page-0.json"],
+        "TLT": ["page-0.json", "page-1.json", "page-2.json"],
+    }
+    # No pages at all: one empty task (Spark reads None for an empty plan).
+    reader = PolygonPagesReader(
+        StructType(), {"path": str(tmp_path), "symbols": "EMPTY,XYZ"}
+    )
+    (part,) = reader.partitions()
+    assert part.ranges == [] and list(reader.read(part)) == []
+
+
+def test_packed_partitions_stream_batch_and_restart(spark, tmp_path):
+    """A store whose unread pages exceed the page cap is read by two
+    packed tasks. The batch read, the availableNow stream and its restart
+    all give the rows of a sequential per-symbol read: page-overlap
+    duplicates dropped (also the one straddling the batch boundary) and
+    the lastentrybysymbol watermark map applied."""
+    from polygon_algotrading_env_spark.sources.restsource import PAGES_PER_TASK
+
+    root = str(tmp_path / "pages")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    symbols = ["AAA", "BBB", "CCC", "DDD"]
+    n = PAGES_PER_TASK // 3  # three symbols fill one task, the fourth spills
+    wm = {"BBB": 10 * DAY_MS}
+
+    def land(first, last):
+        # page p holds t = p and p + 1: each page repeats the last record
+        # of the page before it
+        for sym in symbols:
+            for p in range(first, last):
+                _write_page(root, sym, p, [_rec(p), _rec(p + 1)])
+
+    def want(pages):
+        return sorted(
+            (sym, i * DAY_MS)
+            for sym in symbols
+            for i in range(pages + 1)
+            if i * DAY_MS > wm.get(sym, -1)
+        )
+
+    def batch():
+        return (
+            spark.read.format("polygon_pages")
+            .option("path", root)
+            .option("lastentrybysymbol", json.dumps(wm))
+            .load()
+        )
+
+    def stream():
+        q = (
+            spark.readStream.format("polygon_pages")
+            .option("path", root)
+            .option("lastentrybysymbol", json.dumps(wm))
+            .load()
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        rows = [(r["ticker"], r["t"]) for r in spark.read.parquet(out).collect()]
+        # the file sink writes one file per task that emitted rows
+        files = [f for f in os.listdir(out) if f.endswith(".parquet")]
+        return sorted(rows), len(files)
+
+    spark.dataSource.register(PolygonPagesDataSource)
+    land(0, n)
+    df = batch()
+    assert df.rdd.getNumPartitions() == 2
+    assert sorted((r["ticker"], r["t"]) for r in df.collect()) == want(n)
+    assert stream() == (want(n), 2)
+
+    # Restart: page n's first record repeats page n-1's last, across the
+    # batch boundary; the new pages again overflow one task.
+    land(n, 2 * n)
+    assert stream() == (want(2 * n), 4)
+    assert sorted((r["ticker"], r["t"]) for r in batch().collect()) == want(2 * n)
 
 
 def test_pagestore_roundtrip_on_non_local_fs():
