@@ -62,10 +62,6 @@ def stopword_hits(text: Column | str, words: list[str]) -> Column:
     return F.size(F.regexp_extract_all(t, F.lit(pattern), 0))
 
 
-def lang_scores(text: Column | str) -> dict[str, Column]:
-    return {lang: stopword_hits(text, ws) for lang, ws in LANG_MARKERS.items()}
-
-
 def quality_features(text: Column | str) -> dict[str, Column]:
     """Cheap quality-scoring features: length, whitespace/punct/digit
     ratios, mean word length. All zero-safe."""

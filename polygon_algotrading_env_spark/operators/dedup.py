@@ -55,14 +55,6 @@ def dedup_keep_first(
     return out.select(*[F.col("__row")[c].alias(c) for c in df.columns])
 
 
-def dedup_report(df: DataFrame, deduped: DataFrame) -> dict[str, int]:
-    """Rows before/after, mirroring the reference's dedup logging
-    (``old_source_op.py:106-109``). Two jobs; prefer
-    :func:`observed_dedup` in pipelines (zero extra passes)."""
-    before, after = df.count(), deduped.count()
-    return {"rows_before": before, "rows_after": after, "dropped": before - after}
-
-
 def observed_dedup(
     df: DataFrame, keys: Sequence[str] | None = None
 ) -> tuple[DataFrame, "Observation", "Observation"]:
@@ -314,21 +306,6 @@ def token_span_occurrences(
     return (
         doc.filter(F.col("__n") >= k)
         .select(id_col, F.posexplode(spans).alias("pos", "span"))
-    )
-
-
-def duplicate_spans(
-    occ: DataFrame, id_col: str = "doc_id", min_docs: int = 2
-) -> DataFrame:
-    """Spans occurring in >= ``min_docs`` DISTINCT documents (one column,
-    ``span``). Per-doc repetition doesn't vote: count is over distinct ids.
-    A plain groupBy — partial aggregation absorbs hot boilerplate spans
-    map-side before the shuffle."""
-    return (
-        occ.groupBy("span")
-        .agg(F.countDistinct(id_col).alias("__nd"))
-        .filter(F.col("__nd") >= min_docs)
-        .select("span")
     )
 
 

@@ -260,6 +260,23 @@ def test_stream_hll_sketch_table_matches_batch(spark, tmp_path):
     assert est2 == est
 
 
+def _page_store_batch_bars(spark, root):
+    """Batch ohlcv_bars over every page in the store: what a page-store
+    bars stream must equal once it has read them all."""
+    import pyspark.sql.functions as F
+
+    from polygon_algotrading_env_spark.operators.bars import ohlcv_bars
+
+    src = (
+        spark.read.format("polygon_pages").option("path", root).load()
+        .withColumn("ts", F.timestamp_millis(F.col("t")).cast("timestamp_ntz"))
+    )
+    return ohlcv_bars(
+        src, ts_col="ts", price_col="c", duration="5 minutes",
+        keys=("ticker",), volume_col="v",
+    )
+
+
 def test_stream_bars_from_page_store_end_to_end(spark, tmpdir):
     """North-star composition: the streaming page-cursor source feeding
     windowed OHLCV — one availableNow drain must equal the batch pipeline
@@ -267,9 +284,6 @@ def test_stream_bars_from_page_store_end_to_end(spark, tmpdir):
     import json as _json
     import os
 
-    import pyspark.sql.functions as F
-
-    from polygon_algotrading_env_spark.operators.bars import ohlcv_bars
     from polygon_algotrading_env_spark.streaming.pipeline import (
         stream_bars_from_page_store,
     )
@@ -302,17 +316,107 @@ def test_stream_bars_from_page_store_end_to_end(spark, tmpdir):
         for r in spark.sql("select * from page_bars").collect()
     }
 
-    batch_src = (
-        spark.read.format("polygon_pages").option("path", root).load()
-        .withColumn("ts", F.timestamp_millis(F.col("t")).cast("timestamp_ntz"))
-    )
     want = {
         (r["ticker"], r["bucket_start"], r["open"], r["close"], r["volume"], r["n_trades"])
-        for r in ohlcv_bars(
-            batch_src, ts_col="ts", price_col="c", duration="5 minutes",
-            keys=("ticker",), volume_col="v",
-        ).collect()
+        for r in _page_store_batch_bars(spark, root).collect()
     }
+    assert got == want and len(got) == 6  # 2 symbols x 3 buckets
+
+
+def test_engine_checkpoint_manager_refuses_overwrite(spark, tmp_path):
+    """The offset log's exactly-once rule: a batch id is written once. The
+    engine session's checkpoint manager is the FileSystem one, and it
+    refuses a second atomic create of a path, keeping the first bytes."""
+    from py4j.protocol import Py4JJavaError
+
+    from polygon_algotrading_env_spark.session import CHECKPOINT_FILE_MANAGER
+
+    jvm = spark._jvm
+    target = tmp_path / "0"
+    path = jvm.org.apache.hadoop.fs.Path(target.as_uri())
+    fm = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        path, spark._jsparkSession.sessionState().newHadoopConf()
+    )
+    assert fm.getClass().getName() == CHECKPOINT_FILE_MANAGER
+
+    out = fm.createAtomic(path, False)
+    out.write(bytearray(b"first"))
+    out.close()
+    out = fm.createAtomic(path, False)
+    out.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError) as err:
+        out.close()
+    exists_cls = jvm.org.apache.hadoop.fs.FileAlreadyExistsException._java_lang_class
+    assert exists_cls.isInstance(err.value.java_exception)
+    assert target.read_bytes() == b"first"
+
+
+def test_stream_resumes_checkpoint_of_filecontext_manager(spark, tmp_path):
+    """A page-store bars checkpoint written under Spark's default
+    FileContext manager resumes under the engine's FileSystem manager:
+    the bars equal a batch ohlcv_bars over all pages, none missed or
+    read twice (a re-read page would double its bucket's volume)."""
+    import json as _json
+
+    from polygon_algotrading_env_spark.streaming.pipeline import (
+        stream_bars_from_page_store,
+    )
+
+    MIN_MS = 60_000
+    conf = "spark.sql.streaming.checkpointFileManagerClass"
+    root, ckpt = tmp_path / "pages", str(tmp_path / "ckpt")
+
+    def land(page_no):
+        for sym, base in (("SPY", 100.0), ("TLT", 50.0)):
+            (root / sym).mkdir(parents=True, exist_ok=True)
+            recs = [
+                {"t": i * MIN_MS, "o": base, "h": base + 1, "l": base - 1,
+                 "c": base + (i % 5), "v": 10.0 + i, "vw": base, "n": 2}
+                for i in range(page_no * 4, page_no * 4 + 5)  # overlap 1
+            ]
+            (root / sym / f"page-{page_no}.json").write_text(
+                _json.dumps({"results": recs})
+            )
+
+    def drain():
+        q = (
+            stream_bars_from_page_store(spark, str(root), duration="5 minutes")
+            .writeStream.format("memory")
+            .queryName("resumed_bars")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    land(0)
+    land(1)
+    engine_manager = spark.conf.get(conf)
+    spark.conf.set(
+        conf,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    )
+    try:
+        drain()
+    finally:
+        spark.conf.set(conf, engine_manager)
+    # Minutes 8-12 land after the stop; the 5-10 bucket spans the restart.
+    land(2)
+    drain()
+
+    cols = ("ticker", "bucket_start", "open", "high", "low", "close",
+            "volume", "n_trades")
+    got = sorted(
+        tuple(r[c] for c in cols)
+        for r in spark.sql("select * from resumed_bars").collect()
+    )
+    want = sorted(
+        tuple(r[c] for c in cols)
+        for r in _page_store_batch_bars(spark, str(root)).collect()
+    )
     assert got == want and len(got) == 6  # 2 symbols x 3 buckets
 
 
