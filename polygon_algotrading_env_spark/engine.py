@@ -161,22 +161,18 @@ class Engine:
 
     def cluster_duplicates(
         self, docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-        quality_col: str | None = None, algorithm: str = "hashmin",
+        quality_col: str | None = None,
     ) -> tuple[DataFrame, DataFrame]:
         """Pair→group: connected components over candidate pairs, plus the
-        per-cluster survivor table. Returns (labels, survivors).
-        ``algorithm='star'`` switches to large-star/small-star contraction
-        (better when one huge duplicate cluster dominates)."""
+        per-cluster survivor table. Returns (labels, survivors)."""
         from polygon_algotrading_env_spark.operators.graph import (
             cluster_survivors,
             connected_components,
-            connected_components_star,
         )
 
-        cc = {"hashmin": connected_components, "star": connected_components_star}[
-            algorithm
-        ]
-        labels = cc(pairs, src="id_a", dst="id_b", vertices=docs, id_col=id_col)
+        labels = connected_components(
+            pairs, src="id_a", dst="id_b", vertices=docs, id_col=id_col
+        )
         return labels, cluster_survivors(
             docs, labels, id_col=id_col, quality_col=quality_col
         )
@@ -263,8 +259,9 @@ class Engine:
         window-frame indicator shares the per-key partitioning, so the
         whole stack costs ONE shuffle. Spec grammar: ``sma_N``, ``rsi_N``,
         ``bollinger_N``, ``atr_N``, ``donchian_N``, ``stoch_N_D``,
-        ``obv``, ``rvol_N``, ``ema_N``, ``macd`` (the EMA family drops to
-        one Arrow grouped map)."""
+        ``obv``, ``rvol_N``, ``ema_N``, ``macd`` (the EMA family runs the
+        closed-form window algebra of ``with_ema_closed_form`` /
+        ``with_macd_closed_form``, no Python grouped map)."""
         from polygon_algotrading_env_spark.operators import indicators as _ind
 
         out = bars
@@ -290,9 +287,9 @@ class Engine:
             elif kind == "rvol":
                 out = _ind.with_realized_vol(out, price, args[0], keys, order_cols)
             elif kind == "ema":
-                out = _ind.with_ema(out, price, args[0], keys, order_cols)
+                out = _ind.with_ema_closed_form(out, price, args[0], keys, order_cols)
             elif kind == "macd":
-                out = _ind.with_macd(out, price, keys, order_cols)
+                out = _ind.with_macd_closed_form(out, price, keys, order_cols)
             else:
                 raise ValueError(f"unknown indicator spec: {spec!r}")
         return out

@@ -1,34 +1,26 @@
-"""Distributed connected components — near-dup pairs → dedup clusters.
+"""Graph operators over DataFrames: connected components, survivors,
+triangles, and the iterative family (PageRank/PPR, LPA, k-core, BFS,
+hash-min labels, Bellman-Ford).
 
-The dedup operators emit *pairs* (minhash/LSH candidates, winnowing
-overlaps, embedding neighbors); a training-data pipeline needs *groups*
-— one canonical survivor per duplicate cluster.  Pair→group is connected
-components on the similarity graph, the standard last stage of web-scale
-dedup (public algorithm family: hash-min label propagation; Kiveris et
-al., "Connected Components in MapReduce and Beyond", for the
-large-star/small-star variant of the same idea).
+The iterative operators share one superstep loop, :func:`_supersteps`
+(the Pregel superstep shape, Malewicz et al., SIGMOD 2010): each
+operator supplies its step, the loop owns the rounds, the lineage pins
+and the optional fixpoint probe. ``localCheckpoint`` pins are what keep
+an iterated plan linear — without them the plan grows with every round
+and the job dies on plan-compile time long before data size matters.
 
-Implementation is pure DataFrame ops driven by a driver-side convergence
-loop:
-
-- each round, every vertex takes the min label among itself and its
-  neighbors (one shuffle: join + groupBy-min);
-- a pointer-jumping round (labels joined to labels) then halves the
-  remaining propagation distance, so convergence is O(log diameter)
-  rounds, not O(diameter);
-- ``localCheckpoint`` truncates lineage every round — without it the
-  plan doubles per iteration and the job dies on plan-compile time long
-  before data size matters;
-- convergence = a round in which no label decreased (labels only ever
-  decrease, so this is a fixpoint, detected with a short-circuit
-  ``limit(1).count()`` over the already-checkpointed round output).
-
-At 100 TB the similarity graph is orders of magnitude smaller than the
-corpus (|edges| tracks duplicate density), and every round is a pair of
-balanced hash shuffles on vertex ids.
+Pair→group dedup is connected components on the similarity graph, the
+standard last stage of web-scale dedup (hash-min label propagation;
+Kiveris et al., "Connected Components in MapReduce and Beyond"). At
+100 TB the similarity graph is orders of magnitude smaller than the
+corpus (|edges| tracks duplicate density), and every round is a pair
+of balanced hash shuffles on vertex ids.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable, Sequence
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -49,14 +41,21 @@ def connected_components(
     vertex set so isolated vertices appear in the output (as singleton
     components); otherwise only edge endpoints are labeled.
 
+    Each round every vertex takes the min label among itself and its
+    neighbors, then a pointer-jumping step (labels joined to labels)
+    halves the remaining propagation distance, so convergence takes
+    O(log diameter) rounds. The loop stops at the first round in which no
+    label decreased (labels only decrease, so that is the fixpoint); if
+    ``max_rounds`` runs out first it raises ``RuntimeError`` rather than
+    return unconverged labels.
+
     Returns ``(id, component)`` with ``component`` = min id reachable.
     """
-    # Pin the directed edge set before fanning it out (r15): sym's
-    # union references it twice and the endpoint census twice more — an
-    # uncheckpointed reference re-runs the caller's edge derivation
-    # (e.g. semantic dedup's blocked pairwise-cosine join) per branch,
-    # and a broadcast upstream join leaves no shuffle exchange for AQE
-    # to reuse across branches.
+    # Pin the directed edge set before fanning it out: sym's union
+    # references it twice and the endpoint census twice more — an
+    # unpinned reference re-runs the caller's edge derivation (e.g.
+    # semantic dedup's blocked pairwise-cosine join) per branch, and a
+    # broadcast upstream join leaves no shuffle exchange for AQE to reuse.
     e = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     ).localCheckpoint(eager=True)
@@ -79,7 +78,6 @@ def connected_components(
     labels = ids.select("id", F.col("id").alias("component")).localCheckpoint()
 
     for _ in range(max_rounds):
-        # Round part 1: min over neighbor labels (the propagation shuffle).
         nbr_min = (
             sym.join(
                 labels.select(
@@ -98,12 +96,11 @@ def connected_components(
             ).alias("component"),
             F.col("component").alias("prev"),
         )
-        # Checkpoint before the self-join below: otherwise both join sides
+        # Pinned before the self-join below: otherwise both join sides
         # re-execute this round's propagation subtree.
         stepped = stepped.localCheckpoint()
-        # Round part 2: pointer jumping — follow component -> its component,
-        # halving remaining chain length (labels only decrease, so jumping
-        # through a stale pointer is still monotone-safe).
+        # Pointer jumping: follow component -> its component (labels only
+        # decrease, so jumping through a stale pointer is still monotone).
         jumped = stepped.join(
             stepped.select(
                 F.col("id").alias("component"),
@@ -125,113 +122,14 @@ def connected_components(
         )
         if decreased == 0:
             break
-    sym.unpersist()
-    return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    vertices: DataFrame | None = None,
-    id_col: str = "id",
-    max_rounds: int = 100,
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star edge
-    contraction (the public two-phase MapReduce formulation, Kiveris et
-    al.) — same output contract as :func:`connected_components`.
-
-    Where hash-min label propagation shuffles the FULL adjacency every
-    round, star contraction rewires edges toward component minima so the
-    edge set itself collapses as rounds proceed — the better shape for
-    pathological huge components (one giant near-dup cluster), where
-    hash-min's per-round shuffle stays O(|E|) for every one of its
-    O(log d) rounds:
-
-    - large-star: every node points its larger neighbors at the minimum
-      of its closed neighborhood;
-    - small-star: every node and its smaller neighbors contract onto that
-      minimum;
-    - fixpoint: the edge set is a forest of stars rooted at component
-      minima — each round is two balanced hash shuffles (groupBy-min +
-      join), lineage truncated per round.
-
-    Equivalence with hash-min is test-asserted on chains, cliques,
-    forests, self-loops, and isolated vertices.
-    """
-    # Pin the directed edge set before fanning it out (r15): the
-    # self-looped init and the endpoint census reference it up to three
-    # times; an uncheckpointed reference re-runs the caller's edge
-    # derivation per branch.
-    e = edges.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
-    ).localCheckpoint(eager=True)
-    if vertices is not None:
-        ids = vertices.select(F.col(id_col).cast("long").alias("id")).distinct()
     else:
-        ids = e.select(F.col("u").alias("id")).union(
-            e.select(F.col("v").alias("id"))
-        ).distinct()
-    # Self-loop per vertex keeps singletons alive through contraction and
-    # makes every groupBy-min a min over the CLOSED neighborhood.
-    cur = (
-        e.filter(F.col("u") != F.col("v"))
-        .union(ids.select(F.col("id").alias("u"), F.col("id").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _sym(df: DataFrame) -> DataFrame:
-        return df.union(
-            df.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).distinct()
-
-    for _ in range(max_rounds):
-        sym = _sym(cur)
-        mins = sym.groupBy("u").agg(F.min("v").alias("m"))
-        # Large-star: (v, m(u)) for v > u, plus (u, m(u)) to keep u wired.
-        large = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select("u", F.col("m").alias("v")))
-            .distinct()
-            .localCheckpoint()
-        )
-        sym2 = _sym(large)
-        mins2 = sym2.groupBy("u").agg(F.min("v").alias("m"))
-        # Small-star: (v, m(u)) for v < u, plus (u, m(u)).
-        nxt = (
-            sym2.join(mins2, "u")
-            .filter(F.col("v") < F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select("u", F.col("m").alias("v")))
-            .distinct()
-            .localCheckpoint()
-        )
-        same_size = nxt.count() == cur.count()
-        if same_size and nxt.subtract(cur).limit(1).count() == 0:
-            cur = nxt
-            break
-        cur = nxt
-    else:
-        # Exiting via max_rounds would return silently-wrong labels for
-        # any still-unconverged edges — fail loudly instead. Star
-        # contraction converges in O(log n) rounds, so hitting this means
-        # either a pathological input or a too-small max_rounds.
+        sym.unpersist()
         raise RuntimeError(
-            f"connected_components_star did not reach a fixpoint within "
+            f"connected_components did not reach a fixpoint within "
             f"{max_rounds} rounds; labels would be unreliable"
         )
-    # Fixpoint edges are (vertex → component-min) stars incl. root
-    # self-loops: the label of u is its min neighbor in the closed
-    # neighborhood.
-    return (
-        _sym(cur)
-        .groupBy("u")
-        .agg(F.min("v").alias("component"))
-        .select(F.col("u").alias("id"), "component")
-    )
+    sym.unpersist()
+    return labels
 
 
 def cluster_survivors(
@@ -319,6 +217,106 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     )
 
 
+def _supersteps(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    every: int,
+    probe: Callable[[DataFrame], object] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Run ``rounds`` supersteps ``state = step(state, i)`` and return
+    ``(last, prev)``, ``prev`` being the state the last round read.
+
+    Pins are non-eager ``localCheckpoint``s: every ``every`` rounds, on
+    the state entering the last round (the step and the caller's
+    convergence epilogue both read it) and on the last round's output.
+    A pin truncates lineage at plan-build time and its persist keeps
+    every later reference single-compute; being non-eager, its rows are
+    written by the first job that reads them (under AQE, taking the pin
+    still runs the shuffle stages below it). Pins are physical only, so
+    results do not depend on ``every``.
+
+    ``probe`` maps a pinned state to a value that stays equal only at a
+    fixpoint of a monotone step (a survivor or reached-set count). It
+    runs at each cadence pin before the last round; two equal values in
+    a row prove every remaining round is an exact no-op, so the loop
+    stops and returns ``(state, state)`` — the same rows as running the
+    full cap."""
+    prev, seen = state, None
+    for r in range(1, rounds + 1):
+        prev, state = state, step(state, r - 1)
+        if r % every == 0 or r >= rounds - 1:
+            state = state.localCheckpoint(eager=False)
+        if probe is not None and r % every == 0 and r < rounds:
+            now = probe(state)
+            if now == seen:
+                return state, state
+            seen = now
+    return state, prev
+
+
+def _converged(
+    last: DataFrame, prev: DataFrame, value: str, revisable: bool = True
+) -> DataFrame:
+    """``last`` with a ``converged`` column: the last round changed
+    nothing. Where a row's ``value`` can be revised (hash-min labels,
+    Bellman-Ford distances) that means every row of ``last`` is in
+    ``prev`` — one anti-join catches new rows and changed values alike;
+    where it cannot (BFS hops), equal row counts suffice and need no
+    join. The count rides along as a 1-row broadcast, not a separate action."""
+    def n(df: DataFrame, name: str) -> DataFrame:
+        return F.broadcast(df.agg(F.count(F.lit(1)).alias(name)))
+
+    if revisable:
+        out = last.crossJoin(n(last.join(prev, ["id", value], "left_anti"), "__n_new"))
+        flag = F.col("__n_new") == 0
+    else:
+        out = last.crossJoin(n(last, "__n_last")).crossJoin(n(prev, "__n_prev"))
+        flag = F.col("__n_last") == F.col("__n_prev")
+    return out.select("id", value, flag.alias("converged"))
+
+
+def _looped_edges(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    seeds: Sequence[int] = (),
+    weight: str | None = None,
+) -> DataFrame:
+    """Pinned symmetric edge relation ``(u, v[, w])`` with a self-loop on
+    every endpoint and every seed (weight 0 when weighted).
+
+    The self-loops stand in for the textbook per-round
+    ``unionAll(state)`` branch: each vertex offers itself its own value
+    through the join, so a round is one join + one min aggregate. The
+    directed edge set is pinned first: every union branch reads it, and
+    an unpinned reference re-runs the caller's edge derivation once per
+    branch (plan-counted on entity resolution: 2× levenshtein, 2×
+    BroadcastHashJoin, nothing for AQE to reuse). One ``distinct`` — or,
+    weighted, one min-weight ``groupBy`` — then dedups the swapped copy,
+    parallel edges and the loops together."""
+    cols = [F.col(src).alias("u"), F.col(dst).alias("v")]
+    if weight is not None:
+        cols.append(F.col(weight).alias("w"))
+    e = edges.select(*cols).where(F.col("u") != F.col("v")).localCheckpoint(eager=True)
+    w = [F.col("w")] if weight is not None else []
+    w0 = [F.lit(0).cast(e.schema["w"].dataType).alias("w")] if w else []
+    parts = [
+        e,
+        e.select(F.col("v").alias("u"), F.col("u").alias("v"), *w),
+        e.select("u", F.col("u").alias("v"), *w0),
+        e.select(F.col("v").alias("u"), "v", *w0),
+    ]
+    if seeds:
+        seed_df = edges.sparkSession.createDataFrame(
+            [(int(s),) for s in seeds], "u BIGINT"
+        )
+        parts.append(seed_df.select("u", F.col("u").alias("v"), *w0))
+    sym = reduce(DataFrame.unionAll, parts)
+    sym = sym.groupBy("u", "v").agg(F.min("w").alias("w")) if w else sym.distinct()
+    return sym.localCheckpoint(eager=True)
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -327,216 +325,14 @@ def pagerank(
     n_iter: int = 10,
     vertices: DataFrame | None = None,
     id_col: str = "id",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """PageRank by power iteration over the edge list (directed; pass each
     undirected edge both ways). Returns ``(id, rank)`` summing to ~1.
 
-    Per round: ranks ⋈ degree-annotated edges → contributions grouped on
-    dst — one narrow (id, rank/outdeg) shuffle per iteration. Dangling
-    mass is NOT a separate driver-side aggregate: rank is conserved
-    (every new-rank sum is exactly 1), so the mass parked on dangling
-    nodes equals ``1 − Σ emitted contributions`` — a 1-row broadcast
-    computed from the SAME contribution aggregate via exchange reuse.
-    No job, no collect, no lineage re-execution per iteration; the driver
-    only touches data at the checkpoints. Edges are annotated with their
-    out-degree ONCE before the loop and pinned, so no per-iteration
-    degree join exists either. Lineage is truncated every
-    ``checkpoint_every`` rounds (localCheckpoint — the same guard as the
-    CC operators; a silver-table write at cluster scale) so the plan
-    doesn't grow with iteration count. Float sums make results
-    engine-order-dependent at the last ulp — consumers round; there is
-    deliberately no SQL oracle for this operator.
-    """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col("u").isNotNull() & F.col("v").isNotNull()
-    )
-    # Static across iterations: every edge with its source's out-degree,
-    # pinned once (the old shape re-joined ranks against the degree table
-    # every round AND collected dangling mass to the driver every round).
-    # r16: pinned FIRST — with a partitioned+sorted persist, not a
-    # localCheckpoint — for two measured reasons: (a) the vertex set is
-    # then derived from the MATERIALIZED edge rows, so the caller's edge
-    # derivation (e.g. the co-purchase self-join + dedup) evaluates ONCE
-    # instead of once for the vertex job and once for the edge pin
-    # (plan-counted: both init jobs carried the full upstream); (b) a
-    # cached relation keeps its outputPartitioning/ordering where a
-    # checkpointed one under AQE does not, so every round's rank ⋈ edges
-    # join plans with NO edge-side exchange and NO edge-side sort — the
-    # old shape re-shuffled and re-sorted the full edge relation every
-    # iteration.
-    e_deg = (
-        e.join(e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")), "u")
-        .repartition("u")
-        .sortWithinPartitions("u")
-        .persist()
-    )
-    verts = (
-        vertices.select(F.col(id_col).alias("id"))
-        if vertices is not None
-        else e_deg.select(F.col("u").alias("id")).unionAll(
-            e_deg.select(F.col("v").alias("id"))
-        )
-    ).dropDuplicates(["id"]).localCheckpoint(eager=True)
-    n = verts.count()
-    if n == 0:
-        return verts.withColumn("rank", F.lit(0.0))
-    ranks = verts.withColumn("rank", F.lit(1.0 / n))
-    base = (1.0 - damping) / n
-    for i in range(n_iter):
-        contribs = (
-            ranks.join(e_deg, ranks["id"] == e_deg["u"])
-            .select(
-                F.col("v").alias("id"),
-                (F.col("rank") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("inflow"))
-            # contribs feeds BOTH the dangling-mass scalar and the rank
-            # join below; without truncation the same join+shuffle subtree
-            # evaluates twice per round (exchange reuse is not guaranteed
-            # across the crossJoin boundary). One materialization per
-            # round, reused by both consumers.
-            .localCheckpoint(eager=True)
-        )
-        # Rank conservation: Σ ranks == 1 every round, and each
-        # non-dangling node emits its whole rank, so dangling mass is
-        # 1 − Σ inflow. The scalar rides along as a 1-row broadcast over
-        # the checkpointed contribs — the driver never sees it.
-        emitted = contribs.agg(
-            F.coalesce(F.sum("inflow"), F.lit(0.0)).alias("__emitted")
-        )
-        ranks = (
-            verts.join(contribs, "id", "left_outer")
-            .crossJoin(F.broadcast(emitted))
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.lit(damping / n) * (F.lit(1.0) - F.col("__emitted"))
-                    + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            # Non-eager (r16): truncates lineage at plan-build time with
-            # no blocking per-cadence job; the next round's eager contribs
-            # pin materializes it.
-            ranks = ranks.localCheckpoint(eager=False)
-    return ranks
-
-
-def label_propagation(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    n_iter: int = 10,
-    vertices: DataFrame | None = None,
-    id_col: str = "id",
-    checkpoint_every: int = 4,
-) -> DataFrame:
-    """Synchronous label propagation (community detection): every vertex
-    starts as its own community and each round adopts the most frequent
-    label among its neighbors, ties to the SMALLEST label — the
-    deterministic variant of LPA (asynchronous/random-tiebreak LPA is
-    run-order-dependent; this one is reproducible across runs and
-    partitionings, which the dedup/audit consumers here require).
-    Communities are finer than connected components: a bridge between two
-    dense cliques usually does NOT merge them, which is exactly the
-    near-dup-cluster refinement CC can't express.
-
-    Per round: labels ⋈ symmetrized edges → neighbor-label counts grouped
-    on (vertex, label) → per-vertex argmax via max(struct(count, −label))
-    — two narrow shuffles per iteration, no windows over the vertex set.
-    Isolated vertices keep their own label. Fixed ``n_iter`` (LPA can
-    oscillate; cap-and-stop is the standard contract), lineage truncated
-    every ``checkpoint_every`` rounds like the CC/PageRank loops. Labels
-    must be numeric (the −label tiebreak); rows-only semantics — pinned
-    against a straight Python reference in tests, not a SQL oracle.
-
-    r16 loop shape (measured on the co-purchase consumer, 100× of
-    sf0.01: 118.6 s → see OPTIMIZATION_r16.md): the old round updated
-    ``labels = labels ⋈ best`` — labels referenced TWICE per round, so
-    with no intra-loop checkpoint the final plan doubled per round
-    (plan-counted: 30 SortMergeJoins / 62 Exchanges for 4 rounds).
-    Every vertex of the restricted symmetric edge set appears as a join
-    target each round (sym is symmetric), so ``best`` already covers
-    every connected vertex and IS the new label relation — no join-back,
-    single labels reference, linear lineage. Vertices with no
-    (restricted) edge never receive an offer and keep their own id
-    label; they are a STATIC set, unioned once after the loop. Round 1
-    is special-cased algebraically (the hash-min discipline): against
-    identity labels every neighbor label occurs exactly once (sym is
-    distinct), so the count-then-smallest-label argmax reduces to
-    ``groupBy(v).min(u)``. The pinned edge set is repartitioned and
-    sorted on the join key BEFORE the persist — a cached relation keeps
-    its partitioning and ordering (unlike a localCheckpoint under AQE),
-    so the per-round join plans with NO sym-side exchange and NO
-    sym-side sort.
-    """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col(src) != F.col(dst))
-    )
-    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
-    verts = (
-        vertices.select(F.col(id_col).alias("id")).dropDuplicates(["id"])
-        if vertices is not None
-        else None
-    )
-    if verts is not None:
-        # The declared semantics propagate labels only BETWEEN supplied
-        # vertices (an endpoint outside ``vertices`` is never labeled and
-        # never contributes) — restrict the edge set once, up front.
-        verts = verts.localCheckpoint(eager=True)
-        sym = sym.join(verts.withColumnRenamed("id", "u"), "u").join(
-            verts.select(F.col("id").alias("v")), "v"
-        )
-    sym = (
-        sym.repartition("u")
-        .sortWithinPartitions("u")
-        .persist()
-    )
-    # n_iter == 0 degenerates to identity labels over the connected set.
-    labels = sym.select(F.col("u").alias("id")).dropDuplicates(["id"]).select(
-        "id", F.col("id").cast("long").alias("label")
-    )
-    for i in range(n_iter):
-        if i == 0:
-            # Identity labels ⇒ every neighbor label counts once ⇒ the
-            # most-frequent/smallest argmax is the smallest neighbor id.
-            labels = sym.groupBy(F.col("v").alias("id")).agg(
-                F.min("u").cast("long").alias("label")
-            )
-        else:
-            nbr = (
-                sym.join(
-                    labels.select(F.col("id").alias("u"), "label"), "u"
-                )
-                .groupBy(F.col("v").alias("id"), "label")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-            labels = nbr.groupBy("id").agg(
-                F.max(
-                    F.struct(
-                        F.col("cnt").alias("c"),
-                        (-F.col("label")).alias("nl"),
-                    )
-                ).alias("m")
-            ).select("id", (-F.col("m.nl")).cast("long").alias("label"))
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            # Non-eager: truncates lineage at plan-build time without a
-            # blocking per-cadence job — materialization rides the final
-            # consuming action (the persist keeps multi-reference reads
-            # single-compute).
-            labels = labels.localCheckpoint(eager=False)
-    if verts is not None:
-        # Static keep-set: supplied vertices with no restricted edge
-        # never receive an offer in ANY round — they keep their own id.
-        keep = verts.join(
-            sym.select(F.col("u").alias("id")), "id", "left_anti"
-        ).select("id", F.col("id").cast("long").alias("label"))
-        labels = labels.unionByName(keep)
-    return labels
+    The uniform-teleport case of :func:`personalized_pagerank`: teleport
+    and dangling mass spread over all vertices. Float sums make results
+    engine-order-dependent at the last ulp — consumers round."""
+    return _random_walk(edges, None, src, dst, damping, n_iter, vertices, id_col)
 
 
 def personalized_pagerank(
@@ -548,33 +344,47 @@ def personalized_pagerank(
     n_iter: int = 10,
     vertices: DataFrame | None = None,
     id_col: str = "id",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Personalized PageRank: teleport (and dangling) mass returns to the
     ``restart_ids`` seed set instead of spreading uniformly — ranks
     become 'importance relative to these seeds', the standard
-    related-entity / recommendation primitive (neighbors of what this
-    user bought, pages related to this page).
-
-    Same plan shape as :func:`pagerank` — degree-annotated edges pinned
-    once, one narrow shuffle per iteration, dangling mass recovered by
-    rank conservation as a 1-row broadcast, lineage truncated every few
-    rounds. The seed preference vector is a bounded literal set (seeds
-    are metadata, not data); every iteration's update is
+    related-entity / recommendation primitive. Every round's update is
     (1−d)·p + d·dangling·p + d·inflow with p = 1/|seeds| on the seed
-    set, 0 elsewhere.
-    """
+    set, 0 elsewhere (seeds are metadata: a bounded literal set)."""
     seeds = list(restart_ids)
     if not seeds:
         raise ValueError("restart_ids must be non-empty")
+    return _random_walk(edges, seeds, src, dst, damping, n_iter, vertices, id_col)
+
+
+def _random_walk(
+    edges: DataFrame,
+    seeds: list | None,
+    src: str,
+    dst: str,
+    damping: float,
+    n_iter: int,
+    vertices: DataFrame | None,
+    id_col: str,
+) -> DataFrame:
+    """The PageRank/PPR body; ``seeds=None`` teleports uniformly.
+
+    Per round: ranks ⋈ degree-annotated edges → contributions grouped on
+    dst — one narrow (id, rank/outdeg) shuffle. Dangling mass is never
+    collected: rank is conserved (every round's sum is 1),
+    so the mass parked on dangling nodes is ``1 − Σ inflow``, a 1-row
+    broadcast over the pinned contributions."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col("u").isNotNull() & F.col("v").isNotNull()
     )
-    # r16: degree-annotated edges pinned FIRST with a partitioned+sorted
-    # persist, vertex set derived from the materialized rows — the
-    # caller's edge derivation evaluates once, and every round's
-    # rank ⋈ edges join plans with no edge-side exchange or sort (the
-    # pagerank() rationale; see that operator's comment).
+    # Pinned first, as a partitioned+sorted persist rather than a
+    # localCheckpoint, for two measured reasons: (a) the vertex set is
+    # derived from the materialized edge rows, so the caller's edge
+    # derivation (e.g. the co-purchase self-join) evaluates once, not
+    # once per init job (plan-counted); (b) a cached relation keeps its
+    # partitioning and ordering where a checkpointed one under AQE does
+    # not, so every round's rank ⋈ edges join plans with no edge-side
+    # exchange and no edge-side sort.
     e_deg = (
         e.join(e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg")), "u")
         .repartition("u")
@@ -588,11 +398,18 @@ def personalized_pagerank(
             e_deg.select(F.col("v").alias("id"))
         )
     ).dropDuplicates(["id"]).localCheckpoint(eager=True)
-    p = F.when(F.col("id").isin(seeds), F.lit(1.0 / len(seeds))).otherwise(
-        F.lit(0.0)
-    )
-    ranks = verts.withColumn("rank", p)
-    for i in range(n_iter):
+    if seeds is None:
+        n = verts.count()
+        if n == 0:
+            e_deg.unpersist()
+            return verts.withColumn("rank", F.lit(0.0))
+        p = F.lit(1.0 / n)
+    else:
+        p = F.when(F.col("id").isin(seeds), F.lit(1.0 / len(seeds))).otherwise(
+            F.lit(0.0)
+        )
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         contribs = (
             ranks.join(e_deg, ranks["id"] == e_deg["u"])
             .select(
@@ -601,15 +418,15 @@ def personalized_pagerank(
             )
             .groupBy("id")
             .agg(F.sum("c").alias("inflow"))
-            # Same truncation as pagerank(): contribs has two consumers
-            # (the mass scalar and the rank join) — checkpoint once so the
-            # join+shuffle subtree evaluates once per round.
+            # Two consumers (the mass scalar and the rank join): pinned
+            # eagerly so the join+shuffle subtree evaluates once a round
+            # (exchange reuse is not guaranteed across the crossJoin).
             .localCheckpoint(eager=True)
         )
         emitted = contribs.agg(
             F.coalesce(F.sum("inflow"), F.lit(0.0)).alias("__emitted")
         )
-        ranks = (
+        return (
             verts.join(contribs, "id", "left_outer")
             .crossJoin(F.broadcast(emitted))
             .select(
@@ -617,17 +434,99 @@ def personalized_pagerank(
                 (
                     (1.0 - damping) * p
                     + F.lit(damping) * (F.lit(1.0) - F.col("__emitted")) * p
-                    + F.lit(damping)
-                    * F.coalesce(F.col("inflow"), F.lit(0.0))
+                    + F.lit(damping) * F.coalesce(F.col("inflow"), F.lit(0.0))
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_iter:
-            # Non-eager (r16): truncates lineage at plan-build time with
-            # no blocking per-cadence job; the next round's eager contribs
-            # pin materializes it.
-            ranks = ranks.localCheckpoint(eager=False)
+
+    ranks, _ = _supersteps(verts.withColumn("rank", p), step, n_iter, 4)
+    # The result reads only the pinned verts and contribs.
+    e_deg.unpersist()
     return ranks
+
+
+def label_propagation(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    n_iter: int = 10,
+    vertices: DataFrame | None = None,
+    id_col: str = "id",
+) -> DataFrame:
+    """Synchronous label propagation (community detection): every vertex
+    starts as its own community and each round adopts the most frequent
+    label among its neighbors, ties to the SMALLEST label — the
+    deterministic variant of LPA (asynchronous/random-tiebreak LPA is
+    run-order-dependent; this one is reproducible across runs and
+    partitionings). Communities are finer than connected components: a
+    bridge between two dense cliques usually does NOT merge them.
+
+    Per round: labels ⋈ symmetrized edges → neighbor-label counts grouped
+    on (vertex, label) → per-vertex argmax via max(struct(count, −label)).
+    Every vertex of the symmetric edge set is a join target each round,
+    so the argmax relation IS the next label relation — one labels
+    reference per round, linear lineage. Vertices with no (restricted)
+    edge never receive an offer and keep their own id; they are a static
+    set, unioned once after the loop. Round 1 against identity labels
+    counts every neighbor once (sym is distinct), so its argmax is
+    ``groupBy(v).min(u)``. Fixed ``n_iter`` (LPA can oscillate;
+    cap-and-stop is the standard contract). Labels must be numeric."""
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
+        F.col("u").isNotNull() & F.col("v").isNotNull() & (F.col(src) != F.col(dst))
+    )
+    sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
+    verts = (
+        vertices.select(F.col(id_col).alias("id")).dropDuplicates(["id"])
+        if vertices is not None
+        else None
+    )
+    if verts is not None:
+        # Labels propagate only BETWEEN supplied vertices: restrict the
+        # edge set once, up front.
+        verts = verts.localCheckpoint(eager=True)
+        sym = sym.join(verts.withColumnRenamed("id", "u"), "u").join(
+            verts.select(F.col("id").alias("v")), "v"
+        )
+    # Partitioned and sorted on the join key before the persist: a cached
+    # relation keeps both (a localCheckpoint under AQE does not), so the
+    # per-round join plans with no sym-side exchange or sort.
+    sym = sym.repartition("u").sortWithinPartitions("u").persist()
+
+    def step(labels: DataFrame, i: int) -> DataFrame:
+        if i == 0:
+            return sym.groupBy(F.col("v").alias("id")).agg(
+                F.min("u").cast("long").alias("label")
+            )
+        nbr = (
+            sym.join(labels.select(F.col("id").alias("u"), "label"), "u")
+            .groupBy(F.col("v").alias("id"), "label")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        return nbr.groupBy("id").agg(
+            F.max(
+                F.struct(F.col("cnt").alias("c"), (-F.col("label")).alias("nl"))
+            ).alias("m")
+        ).select("id", (-F.col("m.nl")).cast("long").alias("label"))
+
+    # n_iter == 0 degenerates to identity labels over the connected set.
+    labels, _ = _supersteps(
+        sym.select(F.col("u").alias("id"))
+        .dropDuplicates(["id"])
+        .select("id", F.col("id").cast("long").alias("label")),
+        step,
+        n_iter,
+        4,
+    )
+    if verts is not None:
+        keep = verts.join(
+            sym.select(F.col("u").alias("id")), "id", "left_anti"
+        ).select("id", F.col("id").cast("long").alias("label"))
+        labels = labels.unionByName(keep)
+    # The result (keep included) reads sym: materialize it before the
+    # edge pin is released.
+    labels = labels.localCheckpoint(eager=True)
+    sym.unpersist()
+    return labels
 
 
 def k_core(
@@ -636,72 +535,56 @@ def k_core(
     src: str = "src",
     dst: str = "dst",
     n_rounds: int = 8,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """k-core decomposition by FIXED-ROUND peeling: every round removes
     vertices whose degree within the surviving set is < k; after
     ``n_rounds`` rounds returns (id, core_degree, converged) where
-    ``converged`` records whether the last round was a fixpoint (no
-    vertex removed) — fixed rounds keep the computation deterministic and
-    SQL-replayable (the LPA recipe), and the flag makes an unconverged
-    cap loud instead of silently approximate.
+    ``converged`` records whether one more round would remove nothing —
+    fixed rounds keep the computation deterministic and SQL-replayable,
+    and the flag makes an unconverged cap loud.
 
-    Per round: one semi-join restriction of the (checkpointed) symmetric
-    edge set to surviving endpoints + one degree aggregate — AQE
-    broadcast-converts the survivor sides at runtime, so the symmetric
-    set is never re-shuffled. The survivor list is pinned with a
-    NON-eager localCheckpoint EVERY round (r16): the old cadence-only
-    pin left ``alive`` referenced twice per round with lineage doubling
-    between checkpoints (plan-counted: 14 SortMergeJoins / 29 Exchanges
-    in the round-3 checkpoint job); the per-round pin keeps every round's
-    plan linear at zero blocking-job cost — non-eager means
-    materialization rides the cadence count / final action, and the
-    pin's persist keeps the double-reference (u-side + v-side join)
-    single-compute. (A shrinking restricted-edge-set variant — degree
-    over cur, cur ∩ alive² per round — was built and REJECTED on a
-    paired 100× A/B: 65.3 s vs 50.9 s for this shape on the same host;
-    it replaced the runtime broadcast joins over the pinned symmetric
-    set with SMJ shuffles and per-round caching of the restricted edge
-    relation.) Cascades shrink the vertex set monotonically, so round
-    cost only decreases — and that monotonicity buys a FREE convergence
-    check at every checkpoint: equal survivor counts across a checkpoint
-    interval mean no peel removed anything, i.e. a fixpoint, and every
-    remaining round is an exact no-op — so breaking out early returns
-    bit-identical results to the fixed cap (the DuckDB oracle keeps
-    replaying all rounds; its post-fixpoint rounds are the same no-ops)."""
+    Per round: a restriction of the pinned symmetric edge set to
+    surviving endpoints + one degree aggregate — AQE broadcast-converts
+    the survivor sides at runtime, so the symmetric set is never
+    re-shuffled. The survivor set is referenced twice per round (u-side
+    and v-side), so each round pins it: with the cadence pin alone the
+    lineage doubled between pins (plan-counted: 14 SortMergeJoins / 29
+    Exchanges in one cadence job). A shrinking restricted-edge-set
+    variant was built and rejected on a paired 100× A/B (65.3 s vs
+    50.9 s). Survivors shrink monotonically, so equal survivor counts at
+    two cadence pins prove a fixpoint and the loop stops early with the
+    fixed cap's result."""
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col(src) != F.col(dst)
     )
     sym = e.unionAll(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).distinct().localCheckpoint(eager=True)
-    alive = sym.select(F.col("u").alias("id")).distinct()
-    prev_n = None
-    for i in range(n_rounds):
-        deg = (
+
+    def degrees(alive: DataFrame, name: str) -> DataFrame:
+        return (
             sym.join(alive.withColumnRenamed("id", "u"), "u")
             .join(alive.select(F.col("id").alias("v")), "v")
             .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("deg"))
+            .agg(F.count(F.lit(1)).alias(name))
         )
-        alive = (
-            deg.where(F.col("deg") >= k)
+
+    def step(alive: DataFrame, _: int) -> DataFrame:
+        return (
+            degrees(alive, "deg")
+            .where(F.col("deg") >= k)
             .select(F.col("u").alias("id"))
             .localCheckpoint(eager=False)
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_rounds:
-            n_now = alive.count()
-            if prev_n is not None and n_now == prev_n:
-                break  # fixpoint: remaining rounds are exact no-ops
-            prev_n = n_now
-    last = alive.localCheckpoint(eager=True)
-    final_deg = (
-        sym.join(last.withColumnRenamed("id", "u"), "u")
-        .join(last.select(F.col("id").alias("v")), "v")
-        .groupBy("u")
-        .agg(F.count(F.lit(1)).alias("core_degree"))
+
+    last, _ = _supersteps(
+        sym.select(F.col("u").alias("id")).distinct(),
+        step,
+        n_rounds,
+        3,
+        probe=DataFrame.count,
     )
-    # converged <=> one more peel round removes nothing
+    final_deg = degrees(last, "core_degree")
     next_n = final_deg.where(F.col("core_degree") >= k).agg(
         F.count(F.lit(1)).alias("__next_n")
     )
@@ -723,115 +606,42 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     n_rounds: int = 8,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Multi-source BFS hop distance by FIXED-ROUND frontier relaxation:
     every round each reached vertex offers ``hops + 1`` to its neighbors
     and every vertex keeps its minimum offer; after ``n_rounds`` rounds
     returns (id, hops, converged) where ``converged`` records whether the
-    last round reached no new vertex (hop labels are min-stable, so "no
-    new vertex" IS the BFS fixpoint). Fixed rounds keep the computation
-    deterministic and SQL-replayable as chained CTEs (the LPA / k-core
-    recipe), and the flag makes an unconverged cap loud instead of
-    silently truncated.
+    last round reached no new vertex. Fixed rounds keep the computation
+    deterministic and SQL-replayable as chained CTEs, and the flag makes
+    an unconverged cap loud.
 
-    Per round: one equi-join of the zero-increment self-looped
-    symmetric edge set against the reached relation + one min aggregate
-    — two narrow (id)-keyed shuffles (the self-loops stand in for the
-    textbook ``unionAll(reached)`` branch, r15); the reached set only
-    grows, never the edge set, and
-    lineage is truncated every ``checkpoint_every`` rounds like the
-    other iterative graph loops. At 100 TB the reached relation is
-    (id, hops) — two bigints per vertex — and each round's join is
-    frontier-bounded work under AQE.
-
-    The reached set grows monotonically and a vertex's hop label is its
-    exact BFS distance from the round it first appears (never revised),
-    so equal reached counts across a checkpoint interval prove the
-    frontier emptied — a fixpoint — and every remaining round is an
-    exact no-op. The loop breaks there (converged is True by
-    definition at a fixpoint), returning bit-identical results to the
-    fixed cap the DuckDB oracle replays; the count runs on the already-
-    materialized checkpoint."""
-    # Materialize the DIRECTED edge set first (r15): every branch of the
-    # symmetric/self-loop union below references it, and an
-    # uncheckpointed reference re-runs the caller's whole edge
-    # derivation once per branch — a broadcast blocking join has no
-    # shuffle exchange for AQE to reuse across branches, so e.g. the
-    # entity-resolution levenshtein pass provably evaluated TWICE
-    # (plan-counted) before this pin.
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col(src) != F.col(dst)
-    ).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    seed_df = spark.createDataFrame(
-        [(int(s),) for s in seeds], "u BIGINT"
-    )
-    # Zero-increment self-loops fold the per-round ``unionAll(reached)``
-    # branch into the join (r15, the hash_min_labels discipline): with
-    # (x, x) present for every graph vertex AND every seed, each reached
-    # vertex offers ITSELF hops + 0 through the join, so a round is
-    # join + min-aggregate — one plan branch fewer per round, identical
-    # hop labels by algebra (the self-offer is exactly the row the
-    # union used to contribute; seeds outside the edge set keep their
-    # row through their own self-loop). All four branches read the
-    # MATERIALIZED e, and ONE distinct covers symmetrization and loop
-    # dedup together — same set as the former two-step
-    # (sym0 ckpt → sym ckpt) build, one fewer pass over the upstream.
-    sym = (
-        e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .unionAll(e.select("u", F.col("u").alias("v")))
-        .unionAll(e.select(F.col("v").alias("u"), F.col("v").alias("v")))
-        .unionAll(seed_df.select("u", F.col("u").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    reached = spark.createDataFrame(
+    Per round: one equi-join of the self-looped symmetric edge set
+    (:func:`_looped_edges`; loops offer ``hops + 0``) against the reached
+    relation + one min aggregate. A vertex's hop label is its exact BFS
+    distance from the round it first appears (never revised), so equal
+    reached counts at two cadence pins prove the frontier emptied and the
+    loop stops early with the fixed cap's result."""
+    sym = _looped_edges(edges, src, dst, seeds)
+    reached = edges.sparkSession.createDataFrame(
         [(int(s), 0) for s in seeds], "id BIGINT, hops INT"
     )
-    penult = reached
-    prev_n: int | None = len(set(int(s) for s in seeds))
-    for i in range(n_rounds):
-        nxt = (
+
+    def step(reached: DataFrame, _: int) -> DataFrame:
+        return (
             sym.join(
-                reached.select(
-                    F.col("id").alias("u"), F.col("hops").alias("h")
-                ),
+                reached.select(F.col("id").alias("u"), F.col("hops").alias("h")),
                 "u",
             )
             .select(
                 F.col("v").alias("id"),
-                (
-                    F.col("h")
-                    + (F.col("u") != F.col("v")).cast("int")
-                ).alias("hops"),
+                (F.col("h") + (F.col("u") != F.col("v")).cast("int")).alias("hops"),
             )
             .groupBy("id")
             .agg(F.min("hops").cast("int").alias("hops"))
         )
-        if (i + 1) % checkpoint_every == 0 or i + 1 == n_rounds:
-            nxt = nxt.localCheckpoint(eager=True)
-        if i + 1 == n_rounds:
-            penult = reached.localCheckpoint(eager=True)
-        reached = nxt
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_rounds:
-            n_now = reached.count()
-            if n_now == prev_n:
-                return reached.select(
-                    "id", "hops", F.lit(True).alias("converged")
-                )
-            prev_n = n_now
-    n_last = reached.agg(F.count(F.lit(1)).alias("__n_last"))
-    n_prev = penult.agg(F.count(F.lit(1)).alias("__n_prev"))
-    return (
-        reached.crossJoin(F.broadcast(n_last))
-        .crossJoin(F.broadcast(n_prev))
-        .select(
-            "id",
-            "hops",
-            (F.col("__n_last") == F.col("__n_prev")).alias("converged"),
-        )
-    )
+
+    last, prev = _supersteps(reached, step, n_rounds, 3, probe=DataFrame.count)
+    return _converged(last, prev, "hops", revisable=False)
 
 
 def hash_min_labels(
@@ -839,180 +649,47 @@ def hash_min_labels(
     src: str = "src",
     dst: str = "dst",
     n_rounds: int = 8,
-    checkpoint_every: int = 2,
-    early_exit: bool = False,
 ) -> DataFrame:
     """Fixed-round hash-min component labels: every round each vertex
     keeps the minimum label among itself and its neighbors; after
     ``n_rounds`` rounds returns (id, label, converged) where ``converged``
-    records whether the final round changed no label (hash-min labels
-    only ever decrease, so an unchanged round IS the component fixpoint
-    — every vertex then carries its component's minimum id).
+    records whether the final round changed no label (labels only ever
+    decrease, so an unchanged round IS the component fixpoint).
 
-    This is the deterministic, SQL-replayable sibling of
-    ``connected_components`` (which pointer-jumps under a driver-side
-    convergence loop and is the 100 TB path): fixed rounds + the loud
-    ``converged`` flag make the label table certifiable cross-engine as
-    chained CTEs — the LPA / k-core / BFS recipe. Use it when the match
-    graph's component diameter is bounded by construction (e.g. blocked
-    record-linkage graphs, where a component lives inside one block).
+    The deterministic, SQL-replayable sibling of
+    :func:`connected_components` (which pointer-jumps and probes for a
+    fixpoint after every round): fixed rounds + the loud flag certify cross-engine
+    as chained CTEs. Use it when component diameter is bounded by
+    construction (e.g. blocked record-linkage graphs).
 
     Per round: one equi-join of the self-looped symmetric edge set
-    against the label relation + one min aggregate — two narrow
-    (id)-keyed shuffles. Self-loops stand in for the textbook
-    ``unionAll(labels)`` branch (each vertex offers itself its own
-    label through the join), and round 1 is special-cased algebraically
-    (both r15): against identity labels the join is the edge set
-    itself, so the first round is a single
-    ``groupBy(u).min(least(u, v))`` aggregate over the checkpointed
-    edges — one join, one union branch and the vertex-distinct init
-    removed from every plan, bit-identical output by construction.
+    (:func:`_looped_edges`) against the label relation + one min
+    aggregate. Round 1 against identity labels is the edge set itself:
+    ``groupBy(u).min(least(u, v))`` over the pinned edges, no join.
 
-    ``early_exit`` (default OFF — opt in) stops at a PROVEN fixpoint:
-    labels only ever decrease, so two identical consecutive checkpoints
-    mean every remaining fixed round is an exact no-op — output (labels
-    AND the converged flag) is bit-identical to the full cap, keeping
-    the fixed-round DuckDB oracle valid (law-tested both ways; the
-    CC/k-core/BFS early-exit discipline, r9 item 5). It defaults OFF
-    because the probe is one join+count job per checkpoint from the
-    second checkpoint on, which is pure overhead on graphs that do NOT
-    converge before the cap — the entity-resolution bench graph is one
-    (r14/r15 A/B, fresh-JVM min-of-3 at sf0.1: early_exit=True 4.92 s
-    vs False 4.53 s, ~8%). Opt in only when the graph's diameter is
-    expected to be far below ``n_rounds`` (e.g. star-shaped blocked
-    linkage), where skipped rounds repay the probe many times over.
+    There is no fixpoint probe: on the entity-resolution graph, which
+    does not converge before the 8-round cap, a per-pin probe cost ~8%
+    (fresh-JVM min-of-3 at sf0.1: 4.92 s vs 4.53 s). The pin cadence of
+    2 rounds is measured (fresh-JVM min-of-3 on entity_resolution_parts
+    at sf0.1: every 1/2/3/4/8 rounds → 4.2/3.3/5.9/4.8/10.2 s; re-run
+    on the self-looped loop: 2.9–3.3 s at 2 against 3.5 s at 3): the
+    cost is lineage re-optimization between pins, not data volume."""
+    sym = _looped_edges(edges, src, dst)
 
-    ``checkpoint_every=2`` is a measured optimum, not a guess (r14 A/B,
-    fresh-JVM min-of-3 on entity_resolution_parts at sf0.1):
-    every=1 → 4.2 s, every=2 → 3.3 s, every=3 → 5.9 s, every=4 → 4.8 s,
-    every=8 → 10.2 s. The cost is lineage RE-OPTIMIZATION between
-    checkpoints (each uncheckpointed round re-analyzes the whole join
-    chain built since the last cut), not data volume — and labels are
-    bit-identical at all three SFs (checkpoint placement is physical
-    only). Re-confirmed r15 on the self-looped loop (fresh-JVM
-    min-of-3, paired): every=2 ∈ 2.9-3.3 s vs every=1 ∈ 3.0-3.5 s
-    (a wash within host noise), every=3 → 3.5 s, every=4 → 3.9 s —
-    every=2 stays the default; the r15 query-level scaled wall is
-    5.2 s at 100×-of-sf0.01 (vs 6.9 s for the r14 loop shape on the
-    same host/fixture)."""
-    # Materialize the DIRECTED edge set first (r15): every branch of the
-    # symmetric/self-loop union below references it, and an
-    # uncheckpointed reference re-runs the caller's whole edge
-    # derivation once per branch. The former two-step build
-    # (sym0 = (e ∪ swap).distinct() ckpt, then sym = sym0 ∪ loops ckpt)
-    # pinned AFTER the first union, so the entity-resolution blocking
-    # join + levenshtein still evaluated TWICE inside the sym0 job —
-    # plan-counted (2× levenshtein, 2× BroadcastHashJoin, nothing for
-    # AQE to reuse: a broadcast join has no shuffle exchange). Pinning e
-    # runs the upstream once and writes |E| rows instead of 2|E| at the
-    # first pin.
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
-        F.col(src) != F.col(dst)
-    ).localCheckpoint(eager=True)
-    # Self-loops fold the per-round ``unionAll(labels)`` branch into the
-    # join itself (r15 optimization, guide §2.4): with (x, x) present
-    # for every vertex, the neighbor-label join offers each vertex its
-    # OWN label too, so a round is join + groupBy(id).min — one plan
-    # branch (and its analysis) per round instead of two, identical
-    # labels by algebra. Adds |V| rows to the checkpointed edge set,
-    # negligible beside 2|E| (measured 4/4 paired wins, ~15-20% on the
-    # entity-resolution bench graph at sf0.1; 4.05 -> 3.76 s for the
-    # isolated 8-round loop at 100x-of-sf0.01). All four branches read
-    # the MATERIALIZED e, and ONE distinct covers symmetrization and
-    # loop dedup together — the same (u, v) set as the two-step build.
-    sym = (
-        e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .unionAll(e.select("u", F.col("u").alias("v")))
-        .unionAll(e.select(F.col("v").alias("u"), F.col("v").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = sym.select(F.col("u").alias("id")).distinct().select(
-        "id", F.col("id").alias("label")
-    )
-    penult = labels
-    prev_ck = None
-    for i in range(n_rounds):
+    def step(labels: DataFrame, i: int) -> DataFrame:
         if i == 0:
-            # Round 1 algebraic skip (r15 optimization, guide §2.4):
-            # labels start as the identity (label[x] = x), so round 1's
-            # join offers each u exactly its neighbors' ids and the
-            # min-aggregate reduces to min(u, min neighbors) =
-            # groupBy(u).min(least(u, v)) over sym alone — identical
-            # rows by algebra (least(u,v) <= u covers the identity
-            # union — self-loops contribute least(u,u) = u; sym is
-            # symmetric, so every vertex appears as u). One join and
-            # the vertex-distinct init drop out of the plan: the
-            # loop's first round is a single exchange-in, exchange-out
-            # aggregate over the checkpointed edge set.
-            nxt = (
-                sym.select(
-                    F.col("u").alias("id"),
-                    F.least("u", "v").alias("label"),
-                )
-                .groupBy("id")
-                .agg(F.min("label").alias("label"))
-            )
+            offers = sym.select(F.col("u").alias("id"), F.least("u", "v").alias("label"))
         else:
-            nxt = (
-                sym.join(
-                    labels.select(
-                        F.col("id").alias("v"), F.col("label").alias("l")
-                    ),
-                    "v",
-                )
-                .select(F.col("u").alias("id"), F.col("l").alias("label"))
-                .groupBy("id")
-                .agg(F.min("label").alias("label"))
-            )
-        is_ck = (i + 1) % checkpoint_every == 0 or i + 1 == n_rounds
-        if is_ck:
-            # Non-eager (r16): the pin truncates lineage at plan-build
-            # time either way; eager=False drops the blocking job per
-            # cadence — with early_exit off the loop runs NO driver
-            # action, so the whole 8-round chain executes inside the
-            # final consuming job (the pins' persist keeps each
-            # materialized round single-compute across its references).
-            # Measured on entity_resolution_parts (fresh-JVM min-of-3,
-            # sf0.1, paired): see OPTIMIZATION_r16.md.
-            nxt = nxt.localCheckpoint(eager=early_exit)
-        if i + 1 == n_rounds:
-            penult = labels.localCheckpoint(eager=False)
-        labels = nxt
-        # Early exit on a PROVEN fixpoint (the CC/k-core discipline,
-        # r9 item 5, applied here in r14): labels only ever decrease,
-        # so two identical consecutive checkpoints mean every one of
-        # the remaining fixed rounds is an exact no-op — the result
-        # (labels AND the converged flag) is bit-identical to running
-        # the full cap, which is what keeps the fixed-round DuckDB
-        # oracle valid. The probe compares two already-materialized
-        # checkpoints, so it costs one tiny join, not a recompute.
-        if early_exit and is_ck and i + 1 < n_rounds:
-            if prev_ck is not None:
-                unchanged = (
-                    labels.select("id", F.col("label").alias("la"))
-                    .join(
-                        prev_ck.select("id", F.col("label").alias("lb")),
-                        "id",
-                    )
-                    .where(F.col("la") != F.col("lb"))
-                    .limit(1)
-                    .count()
-                    == 0
-                )
-                if unchanged:
-                    penult = labels
-                    break
-            prev_ck = labels
-    n_changed = (
-        labels.select("id", F.col("label").alias("la"))
-        .join(penult.select("id", F.col("label").alias("lb")), "id")
-        .where(F.col("la") != F.col("lb"))
-        .agg(F.count(F.lit(1)).alias("__n_changed"))
+            offers = sym.join(
+                labels.select(F.col("id").alias("v"), F.col("label").alias("l")), "v"
+            ).select(F.col("u").alias("id"), F.col("l").alias("label"))
+        return offers.groupBy("id").agg(F.min("label").alias("label"))
+
+    identity = sym.select(F.col("u").alias("id")).distinct()
+    last, prev = _supersteps(
+        identity.select("id", F.col("id").alias("label")), step, n_rounds, 2
     )
-    return labels.crossJoin(F.broadcast(n_changed)).select(
-        "id", "label", (F.col("__n_changed") == 0).alias("converged")
-    )
+    return _converged(last, prev, "label")
 
 
 def bellman_ford(
@@ -1022,7 +699,6 @@ def bellman_ford(
     dst: str = "dst",
     weight: str = "w",
     n_rounds: int = 10,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Fixed-round Bellman-Ford single/multi-source cheapest paths over
     non-negative INTEGER edge weights: every round each reached vertex
@@ -1030,104 +706,29 @@ def bellman_ford(
     keeps its minimum offer; after ``n_rounds`` rounds returns
     (id, dist, converged) where ``converged`` records that the final
     round neither reached a new vertex nor lowered any distance (with
-    non-negative weights, distances are min-stable, so an unchanged
-    round IS the shortest-path fixpoint — the weighted generalization of
-    ``bfs_hops``).
+    non-negative weights an unchanged round IS the shortest-path
+    fixpoint — the weighted generalization of :func:`bfs_hops`).
 
     Deterministic fixed rounds + exact integer distances make the table
     SQL-replayable as chained MATERIALIZED CTEs. Per round: one
-    equi-join of the weight-0 self-looped symmetric edge set against
-    the reached relation + one min aggregate — two narrow (id)-keyed
-    shuffles (the self-loops stand in for the textbook
-    ``unionAll(reached)`` branch, r15), lineage truncated every
-    ``checkpoint_every`` rounds."""
-    # Materialize the DIRECTED weighted edge set first (r15): every
-    # branch of the symmetric/self-loop union references it, and an
-    # uncheckpointed reference re-runs the caller's whole edge
-    # derivation once per branch (the hash_min_labels plan-counted
-    # lesson: a broadcast upstream join has no shuffle exchange for
-    # AQE to reuse across branches).
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
-    ).where(F.col(src) != F.col(dst)).localCheckpoint(eager=True)
-    spark = edges.sparkSession
-    seed_df = spark.createDataFrame(
-        [(int(s),) for s in seeds], "u BIGINT"
-    )
-    wt = e.schema["w"].dataType
-    w0 = F.lit(0).cast(wt)
-    # Weight-0 self-loops fold the per-round ``unionAll(reached)``
-    # branch into the join (r15, the hash_min_labels / bfs_hops
-    # discipline): each reached vertex offers itself dist + 0, so a
-    # round is join + min-aggregate — identical distances by algebra
-    # (weights are non-negative, and the self-offer is exactly the row
-    # the union used to contribute; seeds outside the edge set keep
-    # their row through their own self-loop). All branches read the
-    # MATERIALIZED e; the single min-weight groupBy covers parallel-edge
-    # dedup AND loop dedup (no (u, u) exists in e, so loop cells only
-    # ever hold w = 0) — the same (u, v, w) set as the former two-step
-    # sym0-then-loops build, one fewer pass over the upstream.
-    sym = (
-        e.unionAll(
-            e.select(
-                F.col("v").alias("u"), F.col("u").alias("v"), F.col("w")
-            )
-        )
-        .unionAll(e.select("u", F.col("u").alias("v"), w0.alias("w")))
-        .unionAll(
-            e.select(
-                F.col("v").alias("u"), F.col("v").alias("v"), w0.alias("w")
-            )
-        )
-        .unionAll(
-            seed_df.select("u", F.col("u").alias("v"), w0.alias("w"))
-        )
-        .groupBy("u", "v")
-        .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    reached = spark.createDataFrame(
+    equi-join of the weight-0 self-looped symmetric edge set
+    (:func:`_looped_edges`) against the reached relation + one min
+    aggregate."""
+    sym = _looped_edges(edges, src, dst, seeds, weight)
+    reached = edges.sparkSession.createDataFrame(
         [(int(s), 0) for s in seeds], "id BIGINT, dist BIGINT"
     )
-    penult = reached
-    for i in range(n_rounds):
-        nxt = (
+
+    def step(reached: DataFrame, _: int) -> DataFrame:
+        return (
             sym.join(
-                reached.select(
-                    F.col("id").alias("u"), F.col("dist").alias("d")
-                ),
+                reached.select(F.col("id").alias("u"), F.col("dist").alias("d")),
                 "u",
             )
-            .select(
-                F.col("v").alias("id"),
-                (F.col("d") + F.col("w")).alias("dist"),
-            )
+            .select(F.col("v").alias("id"), (F.col("d") + F.col("w")).alias("dist"))
             .groupBy("id")
             .agg(F.min("dist").alias("dist"))
         )
-        if (i + 1) % checkpoint_every == 0 or i + 1 == n_rounds:
-            nxt = nxt.localCheckpoint(eager=True)
-        if i + 1 == n_rounds:
-            penult = reached.localCheckpoint(eager=True)
-        reached = nxt
-    n_last = reached.agg(F.count(F.lit(1)).alias("__n_last"))
-    n_prev = penult.agg(F.count(F.lit(1)).alias("__n_prev"))
-    n_moved = (
-        reached.select("id", F.col("dist").alias("da"))
-        .join(penult.select("id", F.col("dist").alias("db")), "id")
-        .where(F.col("da") != F.col("db"))
-        .agg(F.count(F.lit(1)).alias("__n_moved"))
-    )
-    return (
-        reached.crossJoin(F.broadcast(n_last))
-        .crossJoin(F.broadcast(n_prev))
-        .crossJoin(F.broadcast(n_moved))
-        .select(
-            "id",
-            "dist",
-            (
-                (F.col("__n_last") == F.col("__n_prev"))
-                & (F.col("__n_moved") == 0)
-            ).alias("converged"),
-        )
-    )
+
+    last, prev = _supersteps(reached, step, n_rounds, 3)
+    return _converged(last, prev, "dist")

@@ -43,15 +43,6 @@ SMJ_ALLOWED: frozenset[str] = frozenset(
         "substring_span_dedup",
         "train_test_contamination",
         "copurchase_triangles",
-        "pagerank_copurchase_top20",
-        "textrank_keywords_top20",    # the same pagerank iteration over the
-                                      # checkpointed token co-occurrence edge
-                                      # set — ranks ⋈ degree-annotated edges
-                                      # is fact-derived both sides (vocab²-
-                                      # bounded, but built from the corpus
-                                      # scan); AQE broadcasts the rank side
-                                      # at fixture scale in most rounds
-        "ppr_related_parts",          # same co-ordered-parts self-join family
         "lpa_communities_copurchase",
         "kcore80_copurchase_parts",   # per-round semi-join restriction of the
                                       # checkpointed co-purchase edge set
@@ -109,20 +100,15 @@ SMJ_ALLOWED: frozenset[str] = frozenset(
 DIM_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier", "part"})
 SMJ_BUDGET: dict[str, int] = {
     "copurchase_triangles": 10,      # pair/triangle self-join ladder
-    # r16 loop shape: the per-round join-back is gone (labels = the
-    # argmax relation) and the pinned edge set is a cached partitioned
-    # relation, so only the rank-1 SMJ ladder of the final top-20 pass
-    # remains — measured 3 at both gate scales (was 30 before the
-    # rewrite). Budget 4 = measured + headroom.
-    "lpa_communities_copurchase": 4,
+    # LPA's result is materialized before its edge pin is released, so
+    # the final plan reads pinned labels: measured 0 at both gate scales.
+    # Budget 1 = measured + 1 headroom.
+    "lpa_communities_copurchase": 1,
     # 8 peel rounds x 2 endpoint restrictions + the final degree pair, but
     # AQE broadcasts the shrinking survivor set in most rounds: measured 4
     # at BOTH gate scales (stable). Budget 6 = measured + small headroom;
     # above that the shrink-to-broadcast behavior regressed.
     "kcore80_copurchase_parts": 6,
-    "pagerank_copurchase_top20": 1,
-    "textrank_keywords_top20": 1,
-    "ppr_related_parts": 1,
     "full_outer_daily_activity": 1,
 }
 DEFAULT_SMJ_BUDGET = 2

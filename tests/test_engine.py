@@ -113,9 +113,7 @@ def test_engine_round2_surface(spark, sf_dir, tmp_path):
     assert [r["doc_id"] for r in capped.collect()] == [1]
 
     pairs = spark.createDataFrame([(1, 2)], "id_a int, id_b int")
-    labels, survivors = eng.cluster_duplicates(
-        docs, pairs, quality_col="q", algorithm="star"
-    )
+    labels, survivors = eng.cluster_duplicates(docs, pairs, quality_col="q")
     assert survivors.collect()[0]["survivor_doc_id"] == 1
 
 
@@ -139,6 +137,38 @@ def test_engine_indicator_stack_and_sketches(eng, sf_dir):
     sk = eng.sketch_distinct(ev, "user_id", ["event_type"])
     ests = {r["event_type"]: r["distinct_est"] for r in sk.collect()}
     assert ests and all(v > 0 for v in ests.values())
+
+
+def test_engine_ema_macd_specs_match_sequential_references(eng):
+    """The facade's ``ema_N`` and ``macd`` specs run the closed forms;
+    they must agree with the sequential grouped-map references on a
+    multi-key series long enough (> 512 rows a key) to cross a block."""
+    import math
+
+    from polygon_algotrading_env_spark.operators.indicators import (
+        with_ema,
+        with_macd,
+    )
+
+    rows = [
+        (k, i, 100.0 + 7.0 * math.sin(i / (3.0 + j)) + 0.1 * i)
+        for j, k in enumerate(["A", "B", "C"])
+        for i in range(560 + 40 * j)
+    ]
+    bars = eng.spark.createDataFrame(rows, "sym string, t long, close double")
+    got = eng.indicators(
+        bars, keys=["sym"], order_cols=["t"], specs=("ema_10", "macd")
+    ).collect()
+    ref = with_macd(
+        with_ema(bars, "close", 10, ["sym"], ["t"]), "close", ["sym"], ["t"]
+    ).collect()
+    cols = ("ema_10", "macd", "macd_signal", "macd_hist")
+    want = {(r["sym"], r["t"]): r for r in ref}
+    assert len(got) == len(want) == len(rows)
+    for r in got:
+        w = want[(r["sym"], r["t"])]
+        for c in cols:
+            assert abs(r[c] - w[c]) < 1e-9, (r["sym"], r["t"], c, r[c], w[c])
 
 
 def test_engine_round4_facade_methods(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""Connected components — operators/graph.py."""
+"""Graph operators — operators/graph.py."""
 
 from __future__ import annotations
 
@@ -70,67 +70,52 @@ def test_matches_bruteforce_on_random_graph(spark):
     assert got == expected
 
 
-def test_star_equivalence_with_hashmin(spark):
-    """large-star/small-star ≡ hash-min on chains, cliques, self-loops,
-    isolated vertices, and a random forest."""
-    import random
-
-    from polygon_algotrading_env_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    cases = [
-        # chain + triangle + isolated (via vertices)
-        ([(0, 1), (1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (12, 10)],
-         [0, 1, 2, 3, 4, 10, 11, 12, 20]),
-        # duplicates / directions / self-loop only
-        ([(5, 3), (3, 5), (5, 3), (7, 7)], None),
-    ]
-    rng = random.Random(11)
-    random_edges = [
-        (rng.randrange(0, 60), rng.randrange(0, 60)) for _ in range(80)
-    ]
-    cases.append((random_edges, list(range(0, 60))))
-
-    for raw_edges, vs in cases:
-        edges = spark.createDataFrame(raw_edges, "src long, dst long")
-        vertices = (
-            spark.createDataFrame([(i,) for i in vs], "id long") if vs else None
-        )
-        a = _clusters(connected_components(edges, vertices=vertices).collect())
-        b = _clusters(
-            connected_components_star(edges, vertices=vertices).collect()
-        )
-        assert a == b, (sorted(set(a.items()) ^ set(b.items())))
-
-
-def test_star_long_chain_converges(spark):
-    from polygon_algotrading_env_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    n = 64
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-    )
-    got = _clusters(connected_components_star(edges, max_rounds=12).collect())
-    assert got == {i: 0 for i in range(n)}
-
-
-def test_star_raises_when_rounds_exhausted(spark):
+def test_raises_when_rounds_exhausted(spark):
     import pytest
 
-    from polygon_algotrading_env_spark.operators.graph import (
-        connected_components_star,
-    )
-
-    # A 64-chain cannot contract to a fixpoint in 1 round — must fail
-    # loudly, never return silently-wrong labels.
+    # A 64-chain cannot reach a fixpoint in 1 round — must fail loudly,
+    # never return silently-wrong labels (one round leaves 62 components).
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="fixpoint"):
-        connected_components_star(edges, max_rounds=1)
+        connected_components(edges, max_rounds=1)
+
+
+def test_graph_operators_release_their_cache_pins(spark):
+    """Every graph operator releases what it persists once its result is
+    built: after collecting each result the CacheManager holds nothing
+    (``localCheckpoint`` pins never register there)."""
+    from polygon_algotrading_env_spark.operators import graph as G
+
+    pairs = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (10, 11)]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    weighted = spark.createDataFrame(
+        [(u, v, u + v) for u, v in pairs], "src long, dst long, w long"
+    )
+    verts = spark.createDataFrame([(i,) for i in (0, 1, 2, 3, 4, 99)], "id long")
+    runs = {
+        "connected_components": lambda: G.connected_components(edges),
+        "triangle_count": lambda: G.triangle_count(edges),
+        "pagerank": lambda: G.pagerank(edges, n_iter=5),
+        "personalized_pagerank": lambda: G.personalized_pagerank(edges, [0], n_iter=5),
+        "label_propagation": lambda: G.label_propagation(edges, n_iter=5),
+        "label_propagation(vertices)": lambda: G.label_propagation(
+            edges, vertices=verts, n_iter=3
+        ),
+        "k_core": lambda: G.k_core(edges, k=2, n_rounds=7),
+        "bfs_hops": lambda: G.bfs_hops(edges, seeds=[0], n_rounds=7),
+        "hash_min_labels": lambda: G.hash_min_labels(edges, n_rounds=5),
+        "bellman_ford": lambda: G.bellman_ford(weighted, seeds=[0], n_rounds=7),
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    held = []
+    for name, run in runs.items():
+        spark.catalog.clearCache()
+        assert run().collect()
+        if not cache.isEmpty():
+            held.append(name)
+    assert not held, f"cache entries left behind by {held}"
 
 
 def test_triangle_count_known_graphs(spark):
@@ -521,41 +506,56 @@ def test_bellman_ford_duplicate_edges_keep_min(spark):
     assert got == {0: 0, 1: 2}
 
 
-def test_hash_min_early_exit_is_bit_identical(spark):
-    """The proven-fixpoint early exit (two identical consecutive
-    checkpoints => every remaining fixed round is an exact no-op) must
-    return the SAME rows — labels and the converged flag — as running
-    the full cap, on a graph that converges immediately (a star: one
-    round) and on one that uses every round (a path of length equal to
-    the cap, which never exits and reports converged=false)."""
+def test_fixpoint_probe_exit_is_bit_identical(spark):
+    """The superstep loop's fixpoint probe (equal reached counts at two
+    cadence pins prove every remaining round a no-op) stops early and
+    returns the same rows — values AND the converged flag — as the full
+    cap: on a star, which converges in one round, and on a path still
+    moving at the cap, where the probe must not fire."""
+    import pyspark.sql.functions as F
+
     from polygon_algotrading_env_spark.operators.graph import (
-        hash_min_labels,
+        _converged,
+        _looped_edges,
+        _supersteps,
     )
 
-    star = spark.createDataFrame(
-        [(1, i) for i in range(2, 10)], "src long, dst long"
-    )
-    a = sorted(
-        tuple(r)
-        for r in hash_min_labels(star, n_rounds=8, early_exit=True).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in hash_min_labels(star, n_rounds=8, early_exit=False).collect()
-    )
-    assert a == b
-    assert all(r[2] for r in a)  # converged
+    def run(pairs, rounds, probe):
+        sym = _looped_edges(
+            spark.createDataFrame(pairs, "src long, dst long"), "src", "dst", [1]
+        )
+        ran = []
 
-    path = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, 12)], "src long, dst long"
-    )
-    a = sorted(
-        tuple(r)
-        for r in hash_min_labels(path, n_rounds=4, early_exit=True).collect()
-    )
-    b = sorted(
-        tuple(r)
-        for r in hash_min_labels(path, n_rounds=4, early_exit=False).collect()
-    )
-    assert a == b
-    assert not any(r[2] for r in a)  # still moving at the cap
+        def step(reached, i):
+            ran.append(i)
+            return (
+                sym.join(
+                    reached.select(F.col("id").alias("u"), F.col("hops").alias("h")),
+                    "u",
+                )
+                .select(
+                    F.col("v").alias("id"),
+                    (F.col("h") + (F.col("u") != F.col("v")).cast("int")).alias("hops"),
+                )
+                .groupBy("id")
+                .agg(F.min("hops").alias("hops"))
+            )
+
+        start = spark.createDataFrame([(1, 0)], "id BIGINT, hops INT")
+        last, prev = _supersteps(start, step, rounds, 2, probe)
+        rows = _converged(last, prev, "hops", revisable=False).collect()
+        return sorted(tuple(r) for r in rows), len(ran)
+
+    star = [(1, i) for i in range(2, 10)]
+    early, n_early = run(star, 8, lambda df: df.count())
+    full, n_full = run(star, 8, None)
+    assert (n_early, n_full) == (4, 8)
+    assert early == full
+    assert all(r[2] for r in early)  # converged
+
+    path = [(i, i + 1) for i in range(1, 12)]
+    early, n_early = run(path, 4, lambda df: df.count())
+    full, _ = run(path, 4, None)
+    assert n_early == 4
+    assert early == full
+    assert not any(r[2] for r in early)  # still moving at the cap
