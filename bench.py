@@ -109,6 +109,7 @@ def _unpersist_all(spark, gc: bool = False) -> None:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         for jrdd in jmap.values():
             jrdd.unpersist()
+        spark.catalog.clearCache()  # DataFrame persists live in the CacheManager
         if gc:
             spark.sparkContext._jvm.System.gc()
     except Exception as exc:  # noqa: BLE001 — never let cleanup kill a run

@@ -160,6 +160,35 @@ def run_available_now(
     )
 
 
+def _drain_each_batch(
+    stream_df: DataFrame, checkpoint_dir: str, apply, output_mode: str = "append"
+):
+    """Start ``apply(batch_df, batch_id)`` on every micro-batch of
+    everything currently available, checkpointed for restart — the one
+    starter behind every foreachBatch sink here."""
+    return (
+        stream_df.writeStream.foreachBatch(apply)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _into_batch_partition(path: str, reduce):
+    """foreachBatch body writing ``reduce(batch_df)`` over the batch's own
+    ``batch_id=<id>`` partition of ``path``. Written even when empty: a
+    replay of the same batch id must clear a stale partial, and owning
+    the partition is what makes the replay exactly-once."""
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        reduce(batch_df).write.mode("overwrite").parquet(
+            f"{path}/batch_id={batch_id}"
+        )
+
+    return _apply
+
+
 def stream_dim_refresh(
     stream_df: DataFrame, checkpoint_dir: str, latest_path: str
 ):
@@ -173,13 +202,7 @@ def stream_dim_refresh(
             return
         batch_df.dropDuplicates().write.mode("overwrite").parquet(latest_path)
 
-    return (
-        stream_df.writeStream.foreachBatch(_overwrite)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_each_batch(stream_df, checkpoint_dir, _overwrite, "update")
 
 
 def stream_enrich_with_dim(
@@ -202,18 +225,12 @@ def stream_enrich_with_dim(
     ``batch_id=<id>`` partition, so replays can't duplicate."""
     keys = [on] if isinstance(on, str) else list(on)
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _enrich(batch_df: DataFrame) -> DataFrame:
         dim = batch_df.sparkSession.read.parquet(dim_path)
-        batch_df.join(F.broadcast(dim), keys, how).write.mode(
-            "overwrite"
-        ).parquet(f"{out_path}/batch_id={batch_id}")
+        return batch_df.join(F.broadcast(dim), keys, how)
 
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_each_batch(
+        stream_df, checkpoint_dir, _into_batch_partition(out_path, _enrich)
     )
 
 
@@ -288,13 +305,7 @@ def stream_dedup_ledger(
             f"{ledger_path}/batch_id={batch_id}"
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_each_batch(stream_df, checkpoint_dir, _apply)
 
 
 def stream_hll_sketch_table(
@@ -324,19 +335,10 @@ def stream_hll_sketch_table(
     )
 
     keys = list(key_cols)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sk = hll_group_sketches(batch_df, value_col, keys, lgk=lgk)
-        # Write even when empty: a replay must clear a stale partial.
-        sk.write.mode("overwrite").parquet(f"{sketch_path}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    apply = _into_batch_partition(
+        sketch_path, lambda b: hll_group_sketches(b, value_col, keys, lgk=lgk)
     )
+    return _drain_each_batch(stream_df, checkpoint_dir, apply)
 
 
 def read_hll_estimates(spark: SparkSession, sketch_path: str, key_cols: Sequence[str]) -> DataFrame:
@@ -470,24 +472,17 @@ def stream_mg_summary_table(
         mg_partition_candidates,
     )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _summary(batch_df: DataFrame) -> DataFrame:
         # Single-partition MG of the whole batch: the per-batch summary
         # must itself be ≤ capacity rows, so coalesce before summarizing.
-        summary = (
+        return (
             mg_partition_candidates(batch_df.coalesce(1), key_col, capacity)
             .groupBy(key_col)
             .agg(F.sum("mg_count").alias("mg_count"))
         )
-        summary.write.mode("overwrite").parquet(
-            f"{summary_path}/batch_id={batch_id}"
-        )
 
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_each_batch(
+        stream_df, checkpoint_dir, _into_batch_partition(summary_path, _summary)
     )
 
 
@@ -550,13 +545,7 @@ def stream_to_jdbc_upsert(
             batch_df.dropDuplicates(keys), url, table, keys, properties
         )
 
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _drain_each_batch(stream_df, checkpoint_dir, _apply, "update")
 
 
 def stream_bottomk_sketch_table(
@@ -582,18 +571,10 @@ def stream_bottomk_sketch_table(
     from polygon_algotrading_env_spark.operators.sketches import bottomk_sketch
 
     keys = list(key_cols)
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        sk = bottomk_sketch(batch_df, value_col, id_col, keys, k=k)
-        sk.write.mode("overwrite").parquet(f"{sketch_path}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    apply = _into_batch_partition(
+        sketch_path, lambda b: bottomk_sketch(b, value_col, id_col, keys, k=k)
     )
+    return _drain_each_batch(stream_df, checkpoint_dir, apply)
 
 
 def read_bottomk_quantiles(
@@ -646,22 +627,15 @@ def stream_qdigest_sketch_table(
     exact — operators/sketches.py: qdigest_merge covers that path for
     pre-compressed silver tables)."""
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        hist = (
+    def _histogram(batch_df: DataFrame) -> DataFrame:
+        return (
             batch_df.select(F.col(value_col).cast("bigint").alias("idx"))
             .groupBy("idx")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        hist.write.mode("overwrite").parquet(
-            f"{sketch_path}/batch_id={batch_id}"
-        )
 
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain_each_batch(
+        stream_df, checkpoint_dir, _into_batch_partition(sketch_path, _histogram)
     )
 
 
@@ -721,18 +695,10 @@ def stream_cms_sketch_table(
     step at all."""
     from polygon_algotrading_env_spark.operators.sketches import cms_build
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        cms_build(batch_df, value_col, depth=depth, width=width).write.mode(
-            "overwrite"
-        ).parquet(f"{sketch_path}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    apply = _into_batch_partition(
+        sketch_path, lambda b: cms_build(b, value_col, depth=depth, width=width)
     )
+    return _drain_each_batch(stream_df, checkpoint_dir, apply)
 
 
 def read_cms_estimates(
@@ -782,18 +748,10 @@ def stream_ams_sketch_table(
     is ``rows`` bigints per batch, independent of stream volume."""
     from polygon_algotrading_env_spark.operators.sketches import ams_build
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        ams_build(batch_df, value_col, rows=rows).write.mode(
-            "overwrite"
-        ).parquet(f"{sketch_path}/batch_id={batch_id}")
-
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    apply = _into_batch_partition(
+        sketch_path, lambda b: ams_build(b, value_col, rows=rows)
     )
+    return _drain_each_batch(stream_df, checkpoint_dir, apply)
 
 
 def read_ams_f2(

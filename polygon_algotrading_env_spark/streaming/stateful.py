@@ -8,6 +8,21 @@ summary" a trading UI reads per symbol, updated per micro-batch and
 emitted once per key per batch. State is per-key and O(1) bytes, sharded
 by the group key exactly as on a cluster; a GroupStateTimeout evicts
 symbols that stop trading.
+
+The six sequential twins of batch indicators (CUSUM, SMA signals, EWMA
+vol, RSI, MACD, Kalman level) share ONE per-key update, ``_recursion``:
+the Structured Streaming model of arbitrary stateful processing — one
+function of (key, new rows, state) per trigger. The skeleton restores
+the state, merges and sorts the group's chunks once, drops rows at or
+behind the ``last_ts`` cursor, and hands every surviving row to the
+operator's step rule, which updates the state in place and returns the
+output columns. Each operator is its step rule plus its state/output
+schemas; the schemas are the checkpoint format (state is stored as
+binary UnsafeRows, so a field reorder breaks every existing checkpoint).
+
+``stream_ecdf_drift`` (strict ``<`` guard with a tie cursor, update
+mode) and ``stream_running_stats`` (per-chunk aggregates, idle timeout)
+keep their own update functions.
 """
 
 from __future__ import annotations
@@ -130,6 +145,79 @@ def stream_running_stats(
 
 
 # ---------------------------------------------------------------------------
+# The per-key recursion skeleton shared by the six sequential twins below
+# ---------------------------------------------------------------------------
+
+_NO_TS = -(1 << 62)  # the cursor before any row is applied
+
+
+def _fields(schema: str) -> list[tuple[str, str]]:
+    """(name, type) pairs of a flat DDL schema (no nested commas)."""
+    return [tuple(f.split(None, 1)) for f in schema.split(",")]
+
+
+def _recursion(
+    stream: DataFrame,
+    key_col: str,
+    ts_col: str,
+    value_col: str,
+    state_schema: str,
+    output_schema: str,
+    init: dict,
+    step,
+) -> DataFrame:
+    """One sequential recursion per key over ``value_col`` in
+    ``ts_col`` order, carried across micro-batches in state.
+
+    ``init`` maps every state field except ``last_ts`` to its value for
+    a new key. ``step(state, value)`` updates the state dict in place
+    and returns the output columns after (key, ts), or None to emit
+    nothing for that row. Rows within a micro-batch are applied in
+    event-time order; rows at or before the last applied timestamp are
+    DROPPED (the cross-batch monotonicity guard: a recursion cannot
+    absorb late data retroactively — route late rows to the batch
+    path). Every applied row advances the ``last_ts`` cursor, emitted
+    or not. Output mode append, no timeout."""
+    fields = _fields(state_schema)
+    names = [n for n, _ in fields]
+    arrays = [n for n, t in fields if t.startswith("array")]
+    cols = [n for n, _ in _fields(output_schema)]
+
+    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        s = (
+            dict(zip(names, state.get))
+            if state.exists
+            else dict(init, last_ts=_NO_TS)
+        )
+        for n in arrays:  # fresh lists: no key may share init's
+            s[n] = list(s[n])
+        rows = []
+        pdf = _merged_sorted(pdfs, ts_col)
+        if pdf is not None:
+            ts_us = pdf[ts_col].astype("int64") // 1000
+            for t, v in zip(ts_us.tolist(), pdf[value_col].tolist()):
+                if t <= s["last_ts"]:
+                    continue
+                out = step(s, float(v))
+                s["last_ts"] = t
+                if out is not None:
+                    rows.append((key[0], t, *out))
+        state.update(tuple(s[n] for n in names))
+        if rows:
+            frame = pd.DataFrame(rows, columns=cols)
+            frame[cols[1]] = pd.to_datetime(frame[cols[1]], unit="us")
+            yield frame
+
+    return stream.groupBy(key_col).applyInPandasWithState(
+        _update,
+        outputStructType=output_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+# ---------------------------------------------------------------------------
 # Streaming CUSUM: per-key drift alarms with O(1) state
 # ---------------------------------------------------------------------------
 
@@ -162,39 +250,16 @@ def stream_cusum(
     input row, not one row per key per batch).
     """
 
-    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        s, last_ts = 0.0, -(1 << 62)
-        if state.exists:
-            s, last_ts = state.get
-        out = []
-        pdf = _merged_sorted(pdfs, ts_col)
-        if pdf is not None:
-            ts_us = pdf[ts_col].astype("int64") // 1000
-            for t, a in zip(ts_us.tolist(), pdf[dev_col].tolist()):
-                if t <= last_ts:
-                    continue
-                last_ts = t
-                s = s + float(a)
-                if s < 0.0:
-                    s = 0.0
-                out.append((key[0], t, s, s > threshold))
-        state.update((s, last_ts))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "symbol": [r[0] for r in out],
-                    "ts": pd.to_datetime([r[1] for r in out], unit="us"),
-                    "cusum": [r[2] for r in out],
-                    "alarm": [r[3] for r in out],
-                }
-            )
+    def step(st, a):
+        s = st["s"] + a
+        if s < 0.0:
+            s = 0.0
+        st["s"] = s
+        return s, s > threshold
 
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=_CUSUM_OUTPUT_SCHEMA,
-        stateStructType=_CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _recursion(
+        stream, key_col, ts_col, dev_col,
+        _CUSUM_STATE_SCHEMA, _CUSUM_OUTPUT_SCHEMA, {"s": 0.0}, step,
     )
 
 
@@ -229,62 +294,26 @@ def stream_sma_signal(
     cross-batch monotonicity guard as stream_cusum: rows at or behind the
     last applied event time are dropped, not retro-applied."""
 
-    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        prices: list[float] = []
-        last_signal, last_ts, last_price = 0, -(1 << 62), float("nan")
-        if state.exists:
-            p, last_signal, last_ts, last_price = state.get
-            prices = list(p)
-        out = []
-        pdf = _merged_sorted(pdfs, ts_col)
-        if pdf is not None:
-            ts_us = pdf[ts_col].astype("int64") // 1000
-            for t, px in zip(ts_us.tolist(), pdf[price_col].tolist()):
-                if t <= last_ts:
-                    continue
-                px = float(px)
-                prices.append(px)
-                if len(prices) > slow:
-                    prices.pop(0)
-                n_f = min(fast, len(prices))
-                n_s = len(prices)
-                # mirror the batch path exactly: round the window SUM to
-                # 4 before dividing (cross-engine SMA stabilization)
-                sma_f = round(sum(prices[-n_f:]), 4) / n_f
-                sma_s = round(sum(prices), 4) / n_s
-                signal = 1 if sma_f > sma_s else 0
-                position = last_signal
-                ret = (
-                    0.0
-                    if (last_price != last_price or last_price == 0.0)
-                    else px / last_price - 1.0
-                )
-                out.append(
-                    (key[0], t, px, sma_f, sma_s, signal, position,
-                     position * ret)
-                )
-                last_signal, last_ts, last_price = signal, t, px
-        state.update((prices, last_signal, last_ts, last_price))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "symbol": [r[0] for r in out],
-                    "ts": pd.to_datetime([r[1] for r in out], unit="us"),
-                    "close": [r[2] for r in out],
-                    "sma_fast": [r[3] for r in out],
-                    "sma_slow": [r[4] for r in out],
-                    "signal": [r[5] for r in out],
-                    "position": [r[6] for r in out],
-                    "pnl": [r[7] for r in out],
-                }
-            )
+    def step(st, px):
+        prices = st["prices"]
+        prices.append(px)
+        if len(prices) > slow:
+            prices.pop(0)
+        n_f = min(fast, len(prices))
+        # mirror the batch path exactly: round the window SUM to
+        # 4 before dividing (cross-engine SMA stabilization)
+        sma_f = round(sum(prices[-n_f:]), 4) / n_f
+        sma_s = round(sum(prices), 4) / len(prices)
+        signal = 1 if sma_f > sma_s else 0
+        position, last = st["last_signal"], st["last_price"]
+        ret = 0.0 if (last != last or last == 0.0) else px / last - 1.0
+        st["last_signal"], st["last_price"] = signal, px
+        return px, sma_f, sma_s, signal, position, position * ret
 
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=_SIG_OUTPUT_SCHEMA,
-        stateStructType=_SIG_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    init = {"prices": [], "last_signal": 0, "last_price": float("nan")}
+    return _recursion(
+        stream, key_col, ts_col, price_col,
+        _SIG_STATE_SCHEMA, _SIG_OUTPUT_SCHEMA, init, step,
     )
 
 # ---------------------------------------------------------------------------
@@ -323,47 +352,20 @@ def stream_ewma_vol(
     lam = 1.0 - 2.0 / (span + 1)
     alpha = 2.0 / (span + 1)
 
-    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        var, last_ts, last_close, seeded = 0.0, -(1 << 62), float("nan"), False
-        if state.exists:
-            var, last_ts, last_close, seeded = state.get
-        out = []
-        pdf = _merged_sorted(pdfs, ts_col)
-        if pdf is not None:
-            ts_us = pdf[ts_col].astype("int64") // 1000
-            for t, px in zip(ts_us.tolist(), pdf[price_col].tolist()):
-                if t <= last_ts:
-                    continue
-                px = float(px)
-                r = (
-                    0.0
-                    if (last_close != last_close or last_close == 0.0)
-                    else px / last_close - 1.0
-                )
-                r2 = r * r
-                if not seeded:
-                    var, seeded = r2, True
-                else:
-                    var = lam * var + alpha * r2
-                out.append((key[0], t, px, var**0.5))
-                last_ts, last_close = t, px
-        state.update((var, last_ts, last_close, seeded))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "symbol": [r[0] for r in out],
-                    "ts": pd.to_datetime([r[1] for r in out], unit="us"),
-                    "close": [r[2] for r in out],
-                    "ewma_vol": [r[3] for r in out],
-                }
-            )
+    def step(st, px):
+        last = st["last_close"]
+        r = 0.0 if (last != last or last == 0.0) else px / last - 1.0
+        if st["seeded"]:
+            st["var"] = lam * st["var"] + alpha * (r * r)
+        else:
+            st["var"], st["seeded"] = r * r, True
+        st["last_close"] = px
+        return px, st["var"] ** 0.5
 
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=_EWMA_OUTPUT_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    init = {"var": 0.0, "last_close": float("nan"), "seeded": False}
+    return _recursion(
+        stream, key_col, ts_col, price_col,
+        _EWMA_STATE_SCHEMA, _EWMA_OUTPUT_SCHEMA, init, step,
     )
 
 
@@ -397,50 +399,26 @@ def stream_rsi(
     checkpointed state across a kill/restart. Same cross-batch
     monotonicity guard as :func:`stream_cusum`."""
 
-    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        gains: list[float] = []
-        losses: list[float] = []
-        rn, last_ts, last_val = 0, -(1 << 62), float("nan")
-        if state.exists:
-            g, l_, rn, last_ts, last_val = state.get
-            gains, losses = list(g), list(l_)
-        out = []
-        pdf = _merged_sorted(pdfs, ts_col)
-        if pdf is not None:
-            ts_us = pdf[ts_col].astype("int64") // 1000
-            for t, px in zip(ts_us.tolist(), pdf[price_col].tolist()):
-                if t <= last_ts:
-                    continue
-                px = float(px)
-                rn += 1
-                d = 0.0 if last_val != last_val else px - last_val
-                gains.append(d if d > 0 else 0.0)
-                losses.append(-d if d < 0 else 0.0)
-                if len(gains) > period:
-                    gains.pop(0)
-                    losses.pop(0)
-                if rn > period:
-                    ag = round(sum(gains), 6) / len(gains)
-                    al = round(sum(losses), 6) / len(losses)
-                    rsi = 100.0 if al == 0.0 else 100.0 - 100.0 / (1.0 + ag / al)
-                    out.append((key[0], t, rsi))
-                last_ts, last_val = t, px
-        state.update((gains, losses, rn, last_ts, last_val))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "symbol": [r[0] for r in out],
-                    "ts": pd.to_datetime([r[1] for r in out], unit="us"),
-                    "rsi": [r[2] for r in out],
-                }
-            )
+    def step(st, px):
+        gains, losses, last = st["gains"], st["losses"], st["last_val"]
+        st["rn"] += 1
+        st["last_val"] = px
+        d = 0.0 if last != last else px - last
+        gains.append(d if d > 0 else 0.0)
+        losses.append(-d if d < 0 else 0.0)
+        if len(gains) > period:
+            gains.pop(0)
+            losses.pop(0)
+        if st["rn"] <= period:
+            return None
+        ag = round(sum(gains), 6) / len(gains)
+        al = round(sum(losses), 6) / len(losses)
+        return (100.0 if al == 0.0 else 100.0 - 100.0 / (1.0 + ag / al),)
 
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=_RSI_OUTPUT_SCHEMA,
-        stateStructType=_RSI_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    init = {"gains": [], "losses": [], "rn": 0, "last_val": float("nan")}
+    return _recursion(
+        stream, key_col, ts_col, price_col,
+        _RSI_STATE_SCHEMA, _RSI_OUTPUT_SCHEMA, init, step,
     )
 
 
@@ -479,49 +457,20 @@ def stream_macd(
     as_ = 2.0 / (slow + 1)
     ag = 2.0 / (signal + 1)
 
-    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        ema_f, ema_s, sig = 0.0, 0.0, 0.0
-        started, last_ts = False, -(1 << 62)
-        if state.exists:
-            ema_f, ema_s, sig, started, last_ts = state.get
-        out = []
-        pdf = _merged_sorted(pdfs, ts_col)
-        if pdf is not None:
-            ts_us = pdf[ts_col].astype("int64") // 1000
-            for t, px in zip(ts_us.tolist(), pdf[price_col].tolist()):
-                if t <= last_ts:
-                    continue
-                px = float(px)
-                if not started:
-                    ema_f, ema_s, started = px, px, True
-                    macd = 0.0
-                    sig = macd
-                else:
-                    ema_f = ema_f + af * (px - ema_f)
-                    ema_s = ema_s + as_ * (px - ema_s)
-                    macd = ema_f - ema_s
-                    sig = sig + ag * (macd - sig)
-                out.append((key[0], t, px, ema_f - ema_s, sig))
-                last_ts = t
-        state.update((ema_f, ema_s, sig, started, last_ts))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "symbol": [r[0] for r in out],
-                    "ts": pd.to_datetime([r[1] for r in out], unit="us"),
-                    "close": [r[2] for r in out],
-                    "macd": [r[3] for r in out],
-                    "macd_signal": [r[4] for r in out],
-                    "macd_hist": [r[3] - r[4] for r in out],
-                }
-            )
+    def step(st, px):
+        if st["started"]:
+            st["ema_f"] += af * (px - st["ema_f"])
+            st["ema_s"] += as_ * (px - st["ema_s"])
+            st["sig"] += ag * (st["ema_f"] - st["ema_s"] - st["sig"])
+        else:
+            st.update(ema_f=px, ema_s=px, sig=0.0, started=True)
+        macd = st["ema_f"] - st["ema_s"]
+        return px, macd, st["sig"], macd - st["sig"]
 
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=_MACD_OUTPUT_SCHEMA,
-        stateStructType=_MACD_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    init = {"ema_f": 0.0, "ema_s": 0.0, "sig": 0.0, "started": False}
+    return _recursion(
+        stream, key_col, ts_col, price_col,
+        _MACD_STATE_SCHEMA, _MACD_OUTPUT_SCHEMA, init, step,
     )
 
 
@@ -557,46 +506,21 @@ def stream_kalman_level(
     tests, as is checkpointed state across a kill/restart. Same
     cross-batch monotonicity guard as :func:`stream_cusum`."""
 
-    def _update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        x, p, started, last_ts = 0.0, r_var, False, -(1 << 62)
-        if state.exists:
-            x, p, started, last_ts = state.get
-        out = []
-        pdf = _merged_sorted(pdfs, ts_col)
-        if pdf is not None:
-            ts_us = pdf[ts_col].astype("int64") // 1000
-            for t, px in zip(ts_us.tolist(), pdf[price_col].tolist()):
-                if t <= last_ts:
-                    continue
-                px = float(px)
-                if not started:
-                    x, p, started = px, r_var, True
-                    k = 0.0
-                else:
-                    pp = p + q_var
-                    k = pp / (pp + r_var)
-                    x = x + k * (px - x)
-                    p = (1.0 - k) * pp
-                out.append((key[0], t, px, x, k))
-                last_ts = t
-        state.update((x, p, started, last_ts))
-        if out:
-            yield pd.DataFrame(
-                {
-                    "symbol": [r[0] for r in out],
-                    "ts": pd.to_datetime([r[1] for r in out], unit="us"),
-                    "close": [r[2] for r in out],
-                    "kalman_level": [r[3] for r in out],
-                    "kalman_gain": [r[4] for r in out],
-                }
-            )
+    def step(st, px):
+        if st["started"]:
+            pp = st["p"] + q_var
+            k = pp / (pp + r_var)
+            st["x"] += k * (px - st["x"])
+            st["p"] = (1.0 - k) * pp
+        else:
+            st.update(x=px, p=r_var, started=True)
+            k = 0.0
+        return px, st["x"], k
 
-    return stream.groupBy(key_col).applyInPandasWithState(
-        _update,
-        outputStructType=_KALMAN_OUTPUT_SCHEMA,
-        stateStructType=_KALMAN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    init = {"x": 0.0, "p": r_var, "started": False}
+    return _recursion(
+        stream, key_col, ts_col, price_col,
+        _KALMAN_STATE_SCHEMA, _KALMAN_OUTPUT_SCHEMA, init, step,
     )
 
 

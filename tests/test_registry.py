@@ -2,11 +2,15 @@
 first 50 registered queries, so the curated DRIVER_WINDOW must stay intact.
 """
 
-from polygon_algotrading_env_spark.queries import (
-    DRIVER_WINDOW,
-    PRIOR_DRIVER_CERTIFIED,
-    REGISTRY,
-)
+from test_families import _recorded_greens
+
+from polygon_algotrading_env_spark.queries import DRIVER_WINDOW, REGISTRY
+
+
+def _prior_certified() -> set[str]:
+    """The certified ledger: names hash-matched in a committed
+    CORRECTNESS_r*.json record that no longer hold a window slot."""
+    return _recorded_greens() - set(DRIVER_WINDOW)
 
 
 def test_driver_window_is_first_50_and_oracle_bearing():
@@ -30,9 +34,9 @@ def test_rows_only_queries_sort_last():
 
 def test_rotated_out_queries_stay_registered_with_oracles():
     """Rotation must never drop a query or weaken its oracle: everything in
-    PRIOR_DRIVER_CERTIFIED remains registered and oracle-bearing so local
+    the certified ledger remains registered and oracle-bearing so local
     differential runs (tools/oracle_check.py) still certify it."""
-    for n in PRIOR_DRIVER_CERTIFIED:
+    for n in _prior_certified():
         assert n in REGISTRY, f"prior-certified {n} vanished from registry"
         assert REGISTRY[n].oracle, f"prior-certified {n} lost its oracle"
 
@@ -40,7 +44,7 @@ def test_rotated_out_queries_stay_registered_with_oracles():
 def test_every_capability_family_in_window():
     """One oracle-bearing representative per SURVEY §2 family / LLM
     capability — either occupying a driver-window slot this round, or
-    hash-certified by a recorded prior round (PRIOR_DRIVER_CERTIFIED)."""
+    hash-certified by a recorded prior round (the certified ledger)."""
     window = set(DRIVER_WINDOW)
     families = {
         "filter": "filter_mktsegment",
@@ -136,50 +140,17 @@ def test_every_capability_family_in_window():
         "join_full_outer": "full_outer_daily_activity",
         "robust_regression": "theil_sen_trend_daily",
         "cohort_retention": "weekly_cohort_retention",
-        # families rotated out in r7 keep their anchors via
-        # PRIOR_DRIVER_CERTIFIED
+        # families rotated out in r7 keep their anchors via the
+        # certified ledger
         "exists_not_exists": "sole_blame_suppliers",
         "heavy_hitters": "heavy_hitter_parts",
         "mixture_resample": "mixture_resample_by_lang",
     }
+    prior = _prior_certified()
     missing = {
         f: q
         for f, q in families.items()
-        if q not in window and q not in PRIOR_DRIVER_CERTIFIED
+        if q not in window and q not in prior
     }
     assert not missing, f"families without a certified query: {missing}"
 
-
-def test_prior_certified_ledger_derived_from_committed_records():
-    """PRIOR_DRIVER_CERTIFIED is no longer hand-trusted (r11 VERDICT
-    item 2 found a 14-name undercount): recompute the union of fully
-    green names (rows + schema + hash) across every committed
-    CORRECTNESS_r*.json, subtract the current DRIVER_WINDOW, and pin
-    frozenset EQUALITY. Any future rotation that forgets to move a
-    retiree into the ledger — or parks a never-green name there —
-    fails here, making the rotation self-auditing."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    assert files, "no committed CORRECTNESS records found"
-    green: set[str] = set()
-    for f in files:
-        with open(f) as fh:
-            data = json.load(fh)
-        rec = data.get("parsed") or data
-        for name, r in rec.items():
-            if (
-                isinstance(r, dict)
-                and r.get("rows_match")
-                and r.get("schema_match")
-                and r.get("hash_match")
-            ):
-                green.add(name)
-    derived = frozenset(green - set(DRIVER_WINDOW))
-    assert derived == PRIOR_DRIVER_CERTIFIED, {
-        "missing_from_ledger": sorted(derived - PRIOR_DRIVER_CERTIFIED),
-        "not_green_on_record": sorted(PRIOR_DRIVER_CERTIFIED - derived),
-    }

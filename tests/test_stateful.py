@@ -6,7 +6,12 @@ from datetime import datetime
 
 import pytest
 
-from polygon_algotrading_env_spark.streaming.stateful import stream_running_stats
+from polygon_algotrading_env_spark.streaming.stateful import (
+    stream_cusum,
+    stream_rsi,
+    stream_running_stats,
+    stream_sma_signal,
+)
 
 TICK_SCHEMA = "ticker string, ts timestamp, price double, size double"
 
@@ -646,6 +651,70 @@ def test_stream_kalman_equals_batch_and_survives_restart(spark, tmpdir):
     for k, v in ref.items():
         assert abs(got[k][0] - v[0]) < 1e-12, k
         assert got[k][1] == v[1], k  # gains bit-exact
+
+
+# --- kill/restart through the recursion skeleton ----------------------------
+
+_RESTART_CASES = {
+    "cusum": (DEV_SCHEMA, lambda s: stream_cusum(s, threshold=1.0)),
+    "sma_signal": (BAR_SCHEMA, lambda s: stream_sma_signal(s, fast=2, slow=4)),
+    "rsi": (
+        "symbol string, ts timestamp, value double",
+        lambda s: stream_rsi(s, period=4),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_RESTART_CASES))
+def test_recursion_restart_equals_one_run_and_drops_late_rows(
+    spark, tmpdir, op
+):
+    """Two availableNow runs on one checkpoint emit exactly what one run
+    over the whole feed emits — the state (array fields included: SMA
+    prices, RSI gains/losses) round-trips the state store. The second
+    half re-delivers one row AT and one BEHIND the first run's last
+    timestamp per key, with wild values; the cursor must drop both."""
+    from datetime import timedelta
+    import random
+
+    schema, build = _RESTART_CASES[op]
+    rnd = random.Random(11)
+    t0 = datetime(2024, 1, 1, 10, 0, 0)
+    feed = []
+    for sym, px in (("X", 100.0), ("Y", 50.0)):
+        for i in range(12):
+            px = round(px + rnd.uniform(-2, 2), 2)
+            feed.append((sym, t0 + timedelta(minutes=i), px))
+    cut = t0 + timedelta(minutes=6)
+    first = [r for r in feed if r[1] < cut]
+    second = [r for r in feed if r[1] >= cut]
+    late = [
+        ("X", t0 + timedelta(minutes=5), 1e6),
+        ("Y", t0 + timedelta(minutes=3), -1e6),
+    ]
+
+    def _runs(parts, name):
+        src, got = f"{tmpdir}/{name}_src", []
+        for part in parts:
+            spark.createDataFrame(part, schema).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+            q = (
+                build(spark.readStream.schema(schema).parquet(src))
+                .writeStream.foreachBatch(
+                    lambda bdf, bid: got.extend(map(tuple, bdf.collect()))
+                )
+                .outputMode("append")
+                .option("checkpointLocation", f"{tmpdir}/{name}_ckpt")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+        return sorted(got)
+
+    restarted = _runs([first, second + late], "restart")
+    assert restarted, "no emission"
+    assert restarted == _runs([feed], "once")
 
 
 # --- streaming ECDF drift ≡ first-n/rest batch split -------------------------

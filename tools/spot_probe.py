@@ -64,6 +64,7 @@ def _single(sf_dir: str, names: list[str], passes: int = 3) -> None:
             print(f"# {name} pass{i}: {t}s", file=sys.stderr)
             for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
                 jrdd.unpersist()
+            spark.catalog.clearCache()  # and the CacheManager's entries
     print(json.dumps({"times": times}))
 
 
