@@ -180,28 +180,10 @@ def minhash_candidate_pairs(
     nothing downstream can re-trigger the signature scan. At cluster scale
     the same effect comes from writing signatures to a silver table once.
     """
-    rows_per_band = num_hashes // bands
-    # Null/empty texts must not reach the band join: their (null) signature
-    # band keys all collapse to the hash of an empty slice, which would
-    # bucket every empty doc together — an artificial skew cluster. Guard
-    # on the text itself (pushable to the scan), not on the UDF output
-    # (filtering a UDF column measured ~+30% on this pipeline).
-    sigs = (
-        docs.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
-        .select(
-            F.col(id_col).alias("id"),
-            minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
-        )
-        .persist()
-    )
+    sigs = _signatures(docs, id_col, text_col, num_hashes, shingle_n)
     # Band join carries only (id, band) — the narrow shuffle; signatures
     # re-attach to the (much smaller) deduped pair set afterwards.
-    banded = sigs.select(
-        "id",
-        F.posexplode(lsh_band_keys(F.col("sig"), bands, rows_per_band)).alias(
-            "band_idx", "band_key"
-        ),
-    )
+    banded = _band_rows(sigs, num_hashes, bands)
     a = banded.select(F.col("id").alias("id_a"), "band_idx", "band_key")
     b = banded.select(F.col("id").alias("id_b"), "band_idx", "band_key")
     pairs = (
@@ -210,9 +192,46 @@ def minhash_candidate_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
+    result = _with_est_jaccard(pairs, sigs).localCheckpoint(eager=True)
+    sigs.unpersist()
+    return result
+
+
+def _signatures(
+    docs: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_n: int
+) -> DataFrame:
+    """Persisted (id, sig) of every document with non-empty text; the
+    caller unpersists it."""
+    # Null/empty texts must not reach the band join: their (null) signature
+    # band keys all collapse to the hash of an empty slice, which would
+    # bucket every empty doc together — an artificial skew cluster. Guard
+    # on the text itself (pushable to the scan), not on the UDF output
+    # (filtering a UDF column measured ~+30% on this pipeline).
+    return (
+        docs.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
+        .select(
+            F.col(id_col).alias("id"),
+            minhash_signature(F.col(text_col), num_hashes, shingle_n).alias("sig"),
+        )
+        .persist()
+    )
+
+
+def _band_rows(sigs: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """One (id, band_idx, band_key) row per signature band."""
+    return sigs.select(
+        "id",
+        F.posexplode(
+            lsh_band_keys(F.col("sig"), bands, num_hashes // bands)
+        ).alias("band_idx", "band_key"),
+    )
+
+
+def _with_est_jaccard(pairs: DataFrame, sigs: DataFrame) -> DataFrame:
+    """(id_a, id_b, est_jaccard): the share of signature positions on
+    which the pair agrees."""
     sig_a = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sig_b = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    enriched = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
     # Agreement stays a JVM zip_with: interpreted HOF eval is fine at
     # |pairs| × num_hashes scale (~1M ops), and measured FASTER than an
     # Arrow pandas UDF here — the Python-worker round trip costs more than
@@ -224,13 +243,15 @@ def minhash_candidate_pairs(
             lambda eq: eq,
         )
     )
-    result = enriched.select(
-        "id_a",
-        "id_b",
-        (agree.cast("double") / F.size(F.col("sig_a"))).alias("est_jaccard"),
-    ).localCheckpoint(eager=True)
-    sigs.unpersist()
-    return result
+    return (
+        pairs.join(sig_a, "id_a")
+        .join(sig_b, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            (agree.cast("double") / F.size(F.col("sig_a"))).alias("est_jaccard"),
+        )
+    )
 
 
 def ngram_overlap_pairs(
@@ -632,23 +653,8 @@ def minhash_index_update(
         existing = False
 
     spark = new_docs.sparkSession
-    rows_per_band = num_hashes // bands
-    sigs_new = (
-        new_docs.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
-        .select(
-            F.col(id_col).alias("id"),
-            minhash_signature(F.col(text_col), num_hashes, shingle_n).alias(
-                "sig"
-            ),
-        )
-        .persist()
-    )
-    banded_new = sigs_new.select(
-        "id",
-        F.posexplode(
-            lsh_band_keys(F.col("sig"), bands, rows_per_band)
-        ).alias("band_idx", "band_key"),
-    )
+    sigs_new = _signatures(new_docs, id_col, text_col, num_hashes, shingle_n)
+    banded_new = _band_rows(sigs_new, num_hashes, bands)
 
     bands_path = os.path.join(index_dir, "bands")
     sigs_path = os.path.join(index_dir, "sigs")
@@ -672,35 +678,14 @@ def minhash_index_update(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    sig_a = sigs_all.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sig_b = sigs_all.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda eq: eq,
-        )
-    )
-    result = (
-        pairs.join(sig_a, "id_a")
-        .join(sig_b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (agree.cast("double") / F.size(F.col("sig_a"))).alias(
-                "est_jaccard"
-            ),
-        )
-        .localCheckpoint(eager=True)
-    )
+    result = _with_est_jaccard(pairs, sigs_all).localCheckpoint(eager=True)
     # Append AFTER the probe materialized (localCheckpoint above), so the
     # probe never sees this batch's own rows twice.
     banded_new.write.mode("append").partitionBy("band_idx").parquet(bands_path)
     sigs_new.write.mode("append").parquet(sigs_path)
     if not existing:
-        import json as _json
-
         os.makedirs(index_dir, exist_ok=True)
         with open(meta_path, "w") as fh:
-            _json.dump(params, fh)
+            json.dump(params, fh)
     sigs_new.unpersist()
     return result

@@ -258,15 +258,21 @@ def simhash_docs(spark, sf_dir):
     return sh.groupBy("doc_id").agg(sig.alias("simhash"))
 
 
-@register(
-    "ngram_jaccard_adjacent",
-    oracle="""
-    WITH sh AS (
-      SELECT doc_id, lang,
-             CASE WHEN length(text) < 5 THEN [lower(text)]
+# A document's distinct character 5-gram set, lowercased (the whole text
+# when shorter than 5 chars): the DuckDB form of
+# array_distinct(char_ngrams("text", 5)), shared by the shingle oracles.
+_SHINGLES_5_SQL = """CASE WHEN length(text) < 5 THEN [lower(text)]
                   ELSE list_distinct([substring(lower(text), i, 5)
                                       FOR i IN range(1, length(text) - 3)])
-             END AS s
+             END"""
+
+
+@register(
+    "ngram_jaccard_adjacent",
+    oracle=f"""
+    WITH sh AS (
+      SELECT doc_id, lang,
+             {_SHINGLES_5_SQL} AS s
       FROM documents
     )
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -310,13 +316,10 @@ def ngram_jaccard_adjacent(spark, sf_dir):
 
 @register(
     "near_dup_clusters",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE sh AS (
       SELECT doc_id, lang,
-             CASE WHEN length(text) < 5 THEN [lower(text)]
-                  ELSE list_distinct([substring(lower(text), i, 5)
-                                      FOR i IN range(1, length(text) - 3)])
-             END AS s
+             {_SHINGLES_5_SQL} AS s
       FROM documents
     ),
     e AS (
@@ -474,10 +477,7 @@ def _mh_sig_sql() -> str:
     return f"""
     sh AS (
       SELECT doc_id,
-             unnest(CASE WHEN length(text) < 5 THEN [lower(text)]
-                    ELSE list_distinct([substring(lower(text), i, 5)
-                                        FOR i IN range(1, length(text) - 3)])
-                    END) AS g
+             unnest({_SHINGLES_5_SQL}) AS g
       FROM documents
     ),
     hx AS (
@@ -490,6 +490,28 @@ def _mh_sig_sql() -> str:
            {mins}
       FROM hx GROUP BY doc_id
     )"""
+
+
+# The banded (2 bands × 4 rows) candidate pairs of the md5-MinHash `sig`
+# CTE: the oracle twin of _md5_band_cand_df.
+_MH_BAND_CAND_SQL = """
+    bands AS (
+      SELECT doc_id, b,
+             CASE b WHEN 0 THEN h0 ELSE h4 END AS x,
+             CASE b WHEN 0 THEN h1 ELSE h5 END AS y,
+             CASE b WHEN 0 THEN h2 ELSE h6 END AS z,
+             CASE b WHEN 0 THEN h3 ELSE h7 END AS w
+      FROM sig, (SELECT unnest(range(2)) AS b)
+    ),
+    cand AS (
+      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
+      FROM bands l JOIN bands r
+        ON l.b = r.b AND l.x = r.x AND l.y = r.y AND l.z = r.z
+           AND l.w = r.w AND l.doc_id < r.doc_id
+    )"""
+
+# Number of hashes on which a candidate pair's signatures (sa, sb) agree.
+_MH_AGREE_SQL = " + ".join(f"(sa.h{i} = sb.h{i})::INT" for i in range(_MH_N))
 
 
 def _md5_band_cand_df(sig):
@@ -570,6 +592,34 @@ def _mh_sig_df(spark, sf_dir):
     )
 
 
+def _md5_agreeing_pairs(spark, sf_dir, min_equal: int):
+    """Banded md5-MinHash candidate pairs whose signatures agree on at least
+    ``min_equal`` of the 8 hashes, with the count as ``n_equal``."""
+    sig = _mh_sig_df(spark, sf_dir).localCheckpoint(eager=True)
+    cand = _md5_band_cand_df(sig)
+    sa = sig.select(
+        F.col("doc_id").alias("id_a"),
+        *[F.col(f"h{i}").alias(f"a{i}") for i in range(_MH_N)],
+    )
+    sb = sig.select(
+        F.col("doc_id").alias("id_b"),
+        *[F.col(f"h{i}").alias(f"b{i}") for i in range(_MH_N)],
+    )
+    n_equal = sum(
+        (
+            (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
+            for i in range(_MH_N)
+        ),
+        F.lit(0),
+    ).cast("bigint")
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select("id_a", "id_b", n_equal.alias("n_equal"))
+        .where(F.col("n_equal") >= min_equal)
+    )
+
+
 @register(
     "minhash_md5_signatures",
     oracle="WITH " + _mh_sig_sql() + """
@@ -589,34 +639,14 @@ def minhash_md5_signatures(spark, sf_dir):
 @register(
     "minhash_md5_band_pairs",
     headline=True,
-    oracle="WITH " + _mh_sig_sql() + """,
-    bands AS (
-      SELECT doc_id, b,
-             CASE b WHEN 0 THEN h0 ELSE h4 END AS x,
-             CASE b WHEN 0 THEN h1 ELSE h5 END AS y,
-             CASE b WHEN 0 THEN h2 ELSE h6 END AS z,
-             CASE b WHEN 0 THEN h3 ELSE h7 END AS w
-      FROM sig, (SELECT unnest(range(2)) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM bands l JOIN bands r
-        ON l.b = r.b AND l.x = r.x AND l.y = r.y AND l.z = r.z
-           AND l.w = r.w AND l.doc_id < r.doc_id
-    )
+    oracle="WITH " + _mh_sig_sql() + "," + _MH_BAND_CAND_SQL + f"""
     SELECT c.id_a, c.id_b,
-           CAST((sa.h0 = sb.h0)::INT + (sa.h1 = sb.h1)::INT
-              + (sa.h2 = sb.h2)::INT + (sa.h3 = sb.h3)::INT
-              + (sa.h4 = sb.h4)::INT + (sa.h5 = sb.h5)::INT
-              + (sa.h6 = sb.h6)::INT + (sa.h7 = sb.h7)::INT AS BIGINT)
+           CAST({_MH_AGREE_SQL} AS BIGINT)
              AS n_equal
     FROM cand c
     JOIN sig sa ON sa.doc_id = c.id_a
     JOIN sig sb ON sb.doc_id = c.id_b
-    WHERE (sa.h0 = sb.h0)::INT + (sa.h1 = sb.h1)::INT
-        + (sa.h2 = sb.h2)::INT + (sa.h3 = sb.h3)::INT
-        + (sa.h4 = sb.h4)::INT + (sa.h5 = sb.h5)::INT
-        + (sa.h6 = sb.h6)::INT + (sa.h7 = sb.h7)::INT >= 6
+    WHERE {_MH_AGREE_SQL} >= 6
     """,
 )
 def minhash_md5_band_pairs(spark, sf_dir):
@@ -633,56 +663,17 @@ def minhash_md5_band_pairs(spark, sf_dir):
     recompute locally), but the guarantee matters at cluster scale,
     where a reuse miss would re-run the full corpus shingle+md5 scan
     three times. Dominant cost is the one unavoidable signature scan."""
-    sig = _mh_sig_df(spark, sf_dir).localCheckpoint(eager=True)
-    cand = _md5_band_cand_df(sig)
-    sa = sig.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(_MH_N)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(_MH_N)],
-    )
-    n_equal = sum(
-        (
-            (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
-            for i in range(_MH_N)
-        ),
-        F.lit(0),
-    ).cast("bigint")
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", n_equal.alias("n_equal"))
-        .where(F.col("n_equal") >= 6)
-    )
+    return _md5_agreeing_pairs(spark, sf_dir, 6)
 
 
 @register(
     "minhash_near_dup_pairs",
-    oracle="WITH " + _mh_sig_sql() + """,
-    bands AS (
-      SELECT doc_id, b,
-             CASE b WHEN 0 THEN h0 ELSE h4 END AS x,
-             CASE b WHEN 0 THEN h1 ELSE h5 END AS y,
-             CASE b WHEN 0 THEN h2 ELSE h6 END AS z,
-             CASE b WHEN 0 THEN h3 ELSE h7 END AS w
-      FROM sig, (SELECT unnest(range(2)) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM bands l JOIN bands r
-        ON l.b = r.b AND l.x = r.x AND l.y = r.y AND l.z = r.z
-           AND l.w = r.w AND l.doc_id < r.doc_id
-    )
+    oracle="WITH " + _mh_sig_sql() + "," + _MH_BAND_CAND_SQL + f"""
     SELECT id_a, id_b, n_equal,
            CAST(n_equal AS DOUBLE) / 8 AS est_jaccard
     FROM (
       SELECT c.id_a, c.id_b,
-             CAST((sa.h0 = sb.h0)::INT + (sa.h1 = sb.h1)::INT
-                + (sa.h2 = sb.h2)::INT + (sa.h3 = sb.h3)::INT
-                + (sa.h4 = sb.h4)::INT + (sa.h5 = sb.h5)::INT
-                + (sa.h6 = sb.h6)::INT + (sa.h7 = sb.h7)::INT AS BIGINT)
+             CAST({_MH_AGREE_SQL} AS BIGINT)
                AS n_equal
       FROM cand c
       JOIN sig sa ON sa.doc_id = c.id_a
@@ -700,36 +691,12 @@ def minhash_near_dup_pairs(spark, sf_dir):
     grid is needed. The xxhash64 generator
     (operators/dedup.minhash_candidate_pairs) remains the throughput
     path behind minhash_verified_near_dups."""
-    sig = _mh_sig_df(spark, sf_dir).localCheckpoint(eager=True)
-    cand = _md5_band_cand_df(sig)
-    sa = sig.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(_MH_N)],
+    return _md5_agreeing_pairs(spark, sf_dir, 4).select(
+        "id_a",
+        "id_b",
+        "n_equal",
+        (F.col("n_equal").cast("double") / 8).alias("est_jaccard"),
     )
-    sb = sig.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(_MH_N)],
-    )
-    n_equal = sum(
-        (
-            (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
-            for i in range(_MH_N)
-        ),
-        F.lit(0),
-    ).cast("bigint")
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", n_equal.alias("n_equal"))
-        .where(F.col("n_equal") >= 4)
-        .select(
-            "id_a",
-            "id_b",
-            "n_equal",
-            (F.col("n_equal").cast("double") / 8).alias("est_jaccard"),
-        )
-    )
-
 
 
 def _simhash_md5_oracle() -> str:
@@ -742,10 +709,7 @@ def _simhash_md5_oracle() -> str:
     return f"""
     WITH sh AS (
       SELECT doc_id,
-             unnest(CASE WHEN length(text) < 5 THEN [lower(text)]
-                    ELSE list_distinct([substring(lower(text), i, 5)
-                                        FOR i IN range(1, length(text) - 3)])
-                    END) AS g
+             unnest({_SHINGLES_5_SQL}) AS g
       FROM documents
     ),
     hx AS (
@@ -891,13 +855,10 @@ def winnow_md5_overlap_pairs(spark, sf_dir):
 # explode shingles → co-occurrence join → per-pair common count → set sizes.
 # Candidate-generator queries below must reproduce this set EXACTLY, which
 # bakes a 100%-recall check on the generator into the hash match.
-_EXACT_NEAR_DUP_ORACLE = """
+_EXACT_NEAR_DUP_ORACLE = f"""
     WITH sh AS (
       SELECT doc_id,
-             CASE WHEN length(text) < 5 THEN [lower(text)]
-                  ELSE list_distinct([substring(lower(text), i, 5)
-                                      FOR i IN range(1, length(text) - 3)])
-             END AS s
+             {_SHINGLES_5_SQL} AS s
       FROM documents
     ),
     ex AS (SELECT doc_id, unnest(s) AS g FROM sh),
@@ -952,27 +913,10 @@ def simhash_verified_near_dups(spark, sf_dir):
 
 @register(
     "ngram_jaccard_near_dup",
-    oracle="WITH " + _mh_sig_sql() + """,
-    bands AS (
-      SELECT doc_id, b,
-             CASE b WHEN 0 THEN h0 ELSE h4 END AS x,
-             CASE b WHEN 0 THEN h1 ELSE h5 END AS y,
-             CASE b WHEN 0 THEN h2 ELSE h6 END AS z,
-             CASE b WHEN 0 THEN h3 ELSE h7 END AS w
-      FROM sig, (SELECT unnest(range(2)) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM bands l JOIN bands r
-        ON l.b = r.b AND l.x = r.x AND l.y = r.y AND l.z = r.z
-           AND l.w = r.w AND l.doc_id < r.doc_id
-    ),
+    oracle="WITH " + _mh_sig_sql() + "," + _MH_BAND_CAND_SQL + f""",
     sets AS (
       SELECT doc_id,
-             CASE WHEN length(text) < 5 THEN [lower(text)]
-                  ELSE list_distinct([substring(lower(text), i, 5)
-                                      FOR i IN range(1, length(text) - 3)])
-             END AS s
+             {_SHINGLES_5_SQL} AS s
       FROM documents
     ),
     v AS (
@@ -1123,13 +1067,10 @@ def redact_pii_docs(spark, sf_dir):
 
 @register(
     "dedup_survivors",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE sh AS (
       SELECT doc_id, lang,
-             CASE WHEN length(text) < 5 THEN [lower(text)]
-                  ELSE list_distinct([substring(lower(text), i, 5)
-                                      FOR i IN range(1, length(text) - 3)])
-             END AS s
+             {_SHINGLES_5_SQL} AS s
       FROM documents
     ),
     e AS (
@@ -1616,13 +1557,10 @@ def novelty_by_first_occurrence(spark, sf_dir):
 
 @register(
     "ngram_containment_adjacent",
-    oracle="""
+    oracle=f"""
     WITH sh AS (
       SELECT doc_id, lang,
-             CASE WHEN length(text) < 5 THEN [lower(text)]
-                  ELSE list_distinct([substring(lower(text), i, 5)
-                                      FOR i IN range(1, length(text) - 3)])
-             END AS s
+             {_SHINGLES_5_SQL} AS s
       FROM documents
     )
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -1680,13 +1618,10 @@ def ngram_containment_adjacent(spark, sf_dir):
 
 @register(
     "cluster_aware_split",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE sh AS (
       SELECT doc_id, lang,
-             CASE WHEN length(text) < 5 THEN [lower(text)]
-                  ELSE list_distinct([substring(lower(text), i, 5)
-                                      FOR i IN range(1, length(text) - 3)])
-             END AS s
+             {_SHINGLES_5_SQL} AS s
       FROM documents
     ),
     e AS (
@@ -1855,13 +1790,10 @@ def hapax_ratio_by_source(spark, sf_dir):
 
 @register(
     "dup_cluster_size_histogram",
-    oracle="""
+    oracle=f"""
     WITH RECURSIVE sh AS (
       SELECT doc_id, lang,
-             CASE WHEN length(text) < 5 THEN [lower(text)]
-                  ELSE list_distinct([substring(lower(text), i, 5)
-                                      FOR i IN range(1, length(text) - 3)])
-             END AS s
+             {_SHINGLES_5_SQL} AS s
       FROM documents
     ),
     e AS (
@@ -2047,22 +1979,6 @@ def chunk_docs_overlap(spark, sf_dir):
 
 
 # --- dedup-index recall/precision audit -----------------------------------
-_MH_BAND_CAND_SQL = """
-    bands AS (
-      SELECT doc_id, b,
-             CASE b WHEN 0 THEN h0 ELSE h4 END AS x,
-             CASE b WHEN 0 THEN h1 ELSE h5 END AS y,
-             CASE b WHEN 0 THEN h2 ELSE h6 END AS z,
-             CASE b WHEN 0 THEN h3 ELSE h7 END AS w
-      FROM sig, (SELECT unnest(range(2)) AS b)
-    ),
-    cand AS (
-      SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-      FROM bands l JOIN bands r
-        ON l.b = r.b AND l.x = r.x AND l.y = r.y AND l.z = r.z
-           AND l.w = r.w AND l.doc_id < r.doc_id
-    )"""
-
 _N_PROBES = 50
 
 
@@ -2071,10 +1987,7 @@ _N_PROBES = 50
     oracle="WITH " + _mh_sig_sql() + "," + _MH_BAND_CAND_SQL + f""",
     sets AS (
       SELECT doc_id,
-             CASE WHEN length(text) < 5 THEN [lower(text)]
-                  ELSE list_distinct([substring(lower(text), i, 5)
-                                      FOR i IN range(1, length(text) - 3)])
-             END AS s
+             {_SHINGLES_5_SQL} AS s
       FROM documents
     ),
     truth AS (

@@ -29,12 +29,13 @@ _BAR_ORACLE = """
 """
 
 
-def _bars(spark, sf_dir, duration: str):
-    ev = load_table(spark, sf_dir, "events")
+def _event_bars(spark, sf_dir, duration: str):
+    """Per-symbol OHLCV bars of the event ticks, volume unrounded: the one
+    bar relation every bar query of this module starts from."""
     # `value` plays both price and size in the fixture mapping, so
-    # volume = Σ value per bucket (2-decimal inputs → round-4 is tie-free).
-    bars = ohlcv_bars(
-        ev,
+    # volume = Σ value per bucket.
+    return ohlcv_bars(
+        load_table(spark, sf_dir, "events"),
         ts_col="ts",
         price_col="value",
         duration=duration,
@@ -42,7 +43,11 @@ def _bars(spark, sf_dir, duration: str):
         volume_col="value",
         order_col="ts_ns",
     )
-    return bars.select(
+
+
+def _bars(spark, sf_dir, duration: str):
+    # 2-decimal inputs → round-4 volume is tie-free.
+    return _event_bars(spark, sf_dir, duration).select(
         "event_type",
         "bucket_start",
         "open",
@@ -68,16 +73,7 @@ def ohlcv_bars_1h_resampled(spark, sf_dir):
     bars built FROM the 5-minute bars, not from raw ticks — the oracle
     aggregates raw ticks directly, so a hash match proves the ladder's
     re-aggregation consistency."""
-    ev = load_table(spark, sf_dir, "events")
-    five = ohlcv_bars(
-        ev,
-        ts_col="ts",
-        price_col="value",
-        duration="5 minutes",
-        keys=("event_type",),
-        volume_col="value",
-        order_col="ts_ns",
-    )
+    five = _event_bars(spark, sf_dir, "5 minutes")
     hourly = resample_bars(five, "1 hour", keys=("event_type",))
     return hourly.select(
         "event_type",
@@ -91,17 +87,21 @@ def ohlcv_bars_1h_resampled(spark, sf_dir):
     )
 
 
-@register(
-    "sma_crossover_backtest_5m",
-    headline=True,
-    oracle="""
+# 5-minute close bars per symbol: the bar relation of the close-only
+# oracles.
+_CLOSE_BARS_5M_CTE = """
     WITH bars AS (
       SELECT event_type,
              time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
                AS bucket_start,
              arg_max(value, ts) AS close
       FROM events GROUP BY event_type, bucket_start
-    ),
+    )
+"""
+
+# SMA(5)/SMA(20) crossover signal and next-bar position over the close bars
+# (operators/backtest.sma_crossover_backtest).
+_SMA_CROSS_CTE = _CLOSE_BARS_5M_CTE + """,
     w AS (
       SELECT event_type, bucket_start, close,
              round(sum(close) OVER f5, 4)  / count(*) OVER f5  AS sma_fast,
@@ -124,6 +124,13 @@ def ohlcv_bars_1h_resampled(spark, sf_dir):
                                         ORDER BY bucket_start), 0) AS position
       FROM s
     )
+"""
+
+
+@register(
+    "sma_crossover_backtest_5m",
+    headline=True,
+    oracle=_SMA_CROSS_CTE + """
     SELECT event_type, bucket_start, close, sma_fast, sma_slow,
            CAST(signal AS INT) AS signal,
            CAST(position AS INT) AS position,
@@ -142,24 +149,15 @@ def sma_crossover_backtest_5m(spark, sf_dir):
         sma_crossover_backtest,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     return sma_crossover_backtest(bars)
 
 
 @register(
     "bollinger_20_5m",
-    oracle="""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY event_type, bucket_start
-    )
+    oracle=_CLOSE_BARS_5M_CTE + """
     SELECT event_type, bucket_start, close,
            round(avg(close) OVER f, 6)  AS bb_mid,
            round(avg(close) OVER f + 2 * stddev_samp(close) OVER f, 6)
@@ -180,11 +178,9 @@ def bollinger_20_5m(spark, sf_dir):
     of 2-decimal closes) sits ≥4e-8 from any half-boundary."""
     from polygon_algotrading_env_spark.operators.indicators import with_bollinger
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     bb = with_bollinger(
         bars, "close", 20, 2.0, keys=["event_type"], order_cols=["bucket_start"]
     )
@@ -200,14 +196,7 @@ def bollinger_20_5m(spark, sf_dir):
 
 @register(
     "return_correlation_pairs",
-    oracle="""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY event_type, bucket_start
-    ),
+    oracle=_CLOSE_BARS_5M_CTE + """,
     rets AS (
       SELECT event_type, bucket_start,
              close / nullif(lag(close) OVER (PARTITION BY event_type
@@ -232,11 +221,9 @@ def return_correlation_pairs(spark, sf_dir):
     bars not ticks). corr/regr_slope are order-insensitive moment
     aggregates on both engines; returns are irrational ratios so round-6
     never lands on a grid tie."""
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_type").orderBy("bucket_start")
@@ -269,36 +256,7 @@ def return_correlation_pairs(spark, sf_dir):
     )
 
 
-_BT_CTE = """
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY event_type, bucket_start
-    ),
-    w AS (
-      SELECT event_type, bucket_start, close,
-             round(sum(close) OVER f5, 4)  / count(*) OVER f5  AS sma_fast,
-             round(sum(close) OVER f20, 4) / count(*) OVER f20 AS sma_slow,
-             lag(close) OVER o AS prev_close
-      FROM bars
-      WINDOW o  AS (PARTITION BY event_type ORDER BY bucket_start),
-             f5 AS (PARTITION BY event_type ORDER BY bucket_start
-                    ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-             f20 AS (PARTITION BY event_type ORDER BY bucket_start
-                     ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-    ),
-    s AS (
-      SELECT *, CASE WHEN sma_fast > sma_slow THEN 1 ELSE 0 END AS signal
-      FROM w
-    ),
-    p AS (
-      SELECT *,
-             coalesce(lag(signal) OVER (PARTITION BY event_type
-                                        ORDER BY bucket_start), 0) AS position
-      FROM s
-    ),
+_BT_CTE = _SMA_CROSS_CTE + """,
     bt AS (
       SELECT event_type, bucket_start, close, position,
              position * (CASE WHEN prev_close IS NULL OR prev_close = 0
@@ -346,11 +304,9 @@ def trades_from_crossover_5m(spark, sf_dir):
         sma_crossover_backtest,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     return extract_trades(sma_crossover_backtest(bars))
 
 
@@ -383,11 +339,9 @@ def equity_curve_5m(spark, sf_dir):
         sma_crossover_backtest,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     eq = equity_curve(sma_crossover_backtest(bars))
     return eq.select(
         "event_type", "bucket_start", "pnl",
@@ -396,10 +350,9 @@ def equity_curve_5m(spark, sf_dir):
     )
 
 
-@register(
-    "adjusted_candles_5m",
-    headline=True,
-    oracle="""
+# The derived corporate-actions dim and the 5-minute OHLC bars both
+# adjusted-candle oracles start from; each adds its own `fac` CTE.
+_ADJ_CTE = """
     WITH ms AS (
       SELECT event_type, epoch_ns(ts) // 1000000 AS ms FROM events
     ),
@@ -425,8 +378,68 @@ def equity_curve_5m(spark, sf_dir):
              min(value)         AS low,
              arg_max(value, ts) AS close
       FROM events GROUP BY event_type, bucket_start
-    ),
-    fac AS (
+    )
+"""
+
+
+def _adjusted_candles(spark, sf_dir, adjust, factor_col: str):
+    """5-minute OHLC bars adjusted by ``adjust`` (an operators/adjust
+    function) against the corporate-actions dim derived from the fixture,
+    as adjusted_candles_5m describes."""
+    ev = load_table(spark, sf_dir, "events")
+    ms = F.expr("ts_ns DIV 1000000")
+    epoch = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
+    rng = ev.groupBy("event_type").agg(
+        F.min(ms).alias("lo"), F.max(ms).alias("hi")
+    )
+    actions = rng.select(
+        "event_type",
+        F.explode(
+            F.array(
+                F.struct(
+                    F.expr("lo + (hi - lo) DIV 3").alias("ex_ms"),
+                    F.lit(0.5).alias("factor"),
+                ),
+                F.struct(
+                    F.expr("lo + ((hi - lo) * 2) DIV 3").alias("ex_ms"),
+                    F.lit(0.8).alias("factor"),
+                ),
+            )
+        ).alias("a"),
+    ).select(
+        "event_type",
+        F.expr(f"timestampadd(MILLISECOND, a.ex_ms, {epoch})").alias("ex_ts"),
+        F.col("a.factor").alias("factor"),
+    )
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "open", "high", "low", "close"
+    )
+    adj = adjust(
+        bars,
+        actions,
+        key="event_type",
+        ts_col="bucket_start",
+        ex_date_col="ex_ts",
+        factor_col="factor",
+        price_cols=("open", "high", "low", "close"),
+    )
+    return adj.select(
+        "event_type",
+        "bucket_start",
+        F.round("open", 6).alias("open"),
+        F.round("high", 6).alias("high"),
+        F.round("low", 6).alias("low"),
+        F.round("close", 6).alias("close"),
+        "close_raw",
+        F.round(factor_col, 6).alias(factor_col),
+    )
+
+
+@register(
+    "adjusted_candles_5m",
+    headline=True,
+    oracle=_ADJ_CTE + """
+    , fac AS (
       SELECT b.event_type, b.bucket_start,
              coalesce(exp(sum(ln(a.factor))), 1.0) AS adj_factor
       FROM bars b
@@ -465,86 +478,13 @@ def adjusted_candles_5m(spark, sf_dir):
     exp/ln cross-engine noise."""
     from polygon_algotrading_env_spark.operators.adjust import adjust_prices
 
-    ev = load_table(spark, sf_dir, "events")
-    ms = F.expr("ts_ns DIV 1000000")
-    epoch = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
-    rng = ev.groupBy("event_type").agg(
-        F.min(ms).alias("lo"), F.max(ms).alias("hi")
-    )
-    actions = rng.select(
-        "event_type",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.expr("lo + (hi - lo) DIV 3").alias("ex_ms"),
-                    F.lit(0.5).alias("factor"),
-                ),
-                F.struct(
-                    F.expr("lo + ((hi - lo) * 2) DIV 3").alias("ex_ms"),
-                    F.lit(0.8).alias("factor"),
-                ),
-            )
-        ).alias("a"),
-    ).select(
-        "event_type",
-        F.expr(f"timestampadd(MILLISECOND, a.ex_ms, {epoch})").alias("ex_ts"),
-        F.col("a.factor").alias("factor"),
-    )
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "open", "high", "low", "close")
-    adj = adjust_prices(
-        bars,
-        actions,
-        key="event_type",
-        ts_col="bucket_start",
-        ex_date_col="ex_ts",
-        factor_col="factor",
-        price_cols=("open", "high", "low", "close"),
-    )
-    return adj.select(
-        "event_type",
-        "bucket_start",
-        F.round("open", 6).alias("open"),
-        F.round("high", 6).alias("high"),
-        F.round("low", 6).alias("low"),
-        F.round("close", 6).alias("close"),
-        "close_raw",
-        F.round("adj_factor", 6).alias("adj_factor"),
-    )
+    return _adjusted_candles(spark, sf_dir, adjust_prices, "adj_factor")
 
 
 @register(
     "adjusted_candles_firstday_5m",
-    oracle="""
-    WITH ms AS (
-      SELECT event_type, epoch_ns(ts) // 1000000 AS ms FROM events
-    ),
-    rng AS (
-      SELECT event_type, min(ms) AS lo, max(ms) AS hi FROM ms
-      GROUP BY event_type
-    ),
-    actions AS (
-      SELECT event_type, epoch_ms(lo + (hi - lo) // 3) AS ex_ts,
-             0.5 AS factor
-      FROM rng
-      UNION ALL
-      SELECT event_type, epoch_ms(lo + ((hi - lo) * 2) // 3) AS ex_ts,
-             0.8 AS factor
-      FROM rng
-    ),
-    bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_min(value, ts) AS open,
-             max(value)         AS high,
-             min(value)         AS low,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY event_type, bucket_start
-    ),
-    fac AS (
+    oracle=_ADJ_CTE + """
+    , fac AS (
       SELECT b.event_type, b.bucket_start,
              coalesce(exp(sum(ln(a.factor))), 1.0) AS a_prefix
       FROM bars b
@@ -583,53 +523,8 @@ def adjusted_candles_firstday_5m(spark, sf_dir):
         adjust_prices_firstday,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    ms = F.expr("ts_ns DIV 1000000")
-    epoch = "TIMESTAMP_NTZ '1970-01-01 00:00:00'"
-    rng = ev.groupBy("event_type").agg(
-        F.min(ms).alias("lo"), F.max(ms).alias("hi")
-    )
-    actions = rng.select(
-        "event_type",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.expr("lo + (hi - lo) DIV 3").alias("ex_ms"),
-                    F.lit(0.5).alias("factor"),
-                ),
-                F.struct(
-                    F.expr("lo + ((hi - lo) * 2) DIV 3").alias("ex_ms"),
-                    F.lit(0.8).alias("factor"),
-                ),
-            )
-        ).alias("a"),
-    ).select(
-        "event_type",
-        F.expr(f"timestampadd(MILLISECOND, a.ex_ms, {epoch})").alias("ex_ts"),
-        F.col("a.factor").alias("factor"),
-    )
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "open", "high", "low", "close")
-    adj = adjust_prices_firstday(
-        bars,
-        actions,
-        key="event_type",
-        ts_col="bucket_start",
-        ex_date_col="ex_ts",
-        factor_col="factor",
-        price_cols=("open", "high", "low", "close"),
-    )
-    return adj.select(
-        "event_type",
-        "bucket_start",
-        F.round("open", 6).alias("open"),
-        F.round("high", 6).alias("high"),
-        F.round("low", 6).alias("low"),
-        F.round("close", 6).alias("close"),
-        "close_raw",
-        F.round("a_prefix", 6).alias("a_prefix"),
+    return _adjusted_candles(
+        spark, sf_dir, adjust_prices_firstday, "a_prefix"
     )
 
 
@@ -667,11 +562,9 @@ def strategy_summary_5m(spark, sf_dir):
         sma_crossover_backtest,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     eq = equity_curve(sma_crossover_backtest(bars))
     return eq.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_bars"),
@@ -728,11 +621,9 @@ def gap_filled_bars_30m(spark, sf_dir):
     (operators/bars.py: fill_bar_gaps)."""
     from polygon_algotrading_env_spark.operators.bars import fill_bar_gaps
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="30 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close", "volume", "n_trades")
+    bars = _event_bars(spark, sf_dir, "30 minutes").select(
+        "event_type", "bucket_start", "close", "volume", "n_trades"
+    )
     dense = fill_bar_gaps(bars, "30 minutes", keys=("event_type",))
     return dense.select(
         "event_type",
@@ -969,14 +860,7 @@ def _macd_oracle() -> str:
         "sig", s26, keys=["event_type"], ord_col="bucket_start",
         val="__f - __s", span=9, out="__sig",
     )
-    return f"""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY event_type, bucket_start
-    ),
+    return _CLOSE_BARS_5M_CTE + f""",
     d AS (
       SELECT event_type, bucket_start, close,
              row_number() OVER (PARTITION BY event_type
@@ -1004,8 +888,9 @@ def macd_12_26_9_5m(spark, sf_dir):
     closed form (``queries/_ema_sql.py`` — pow-normalized block prefix
     sums, signal = pass over pass1−pass2), so the hash match certifies
     the blocked closed form cross-engine; equivalence to the pandas
-    sequential recursion (with_macd) is pinned deterministically in
-    tests/test_indicators.py across spans and forced-small blocks."""
+    sequential recursion (``with_macd`` in tests/indicator_refs.py) is
+    pinned deterministically in tests/test_indicators.py across spans and
+    forced-small blocks."""
     from polygon_algotrading_env_spark.operators.indicators import (
         with_macd_closed_form,
     )
@@ -1090,11 +975,9 @@ def interpolated_bars_30m(spark, sf_dir):
     expansion vs scaled rint) would otherwise flip the last digit."""
     from polygon_algotrading_env_spark.operators.bars import fill_bar_gaps
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="30 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "30 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     dense = fill_bar_gaps(
         bars, "30 minutes", keys=("event_type",), method="interpolate"
     )
@@ -2537,11 +2420,9 @@ def risk_adjusted_metrics_5m(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     eq = equity_curve(sma_crossover_backtest(bars))
     w = Window.partitionBy("event_type")
     dd = eq.select(
@@ -3292,11 +3173,9 @@ def deflated_sharpe_zscore(spark, sf_dir):
         sma_crossover_backtest,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     bt = sma_crossover_backtest(bars).select("event_type", "pnl")
     mu = bt.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"), F.avg("pnl").alias("m1")
@@ -3436,11 +3315,9 @@ def bootstrap_sharpe_ci(spark, sf_dir):
         sma_crossover_backtest,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     bt = sma_crossover_backtest(bars).select(
         "event_type",
         "bucket_start",
@@ -3815,11 +3692,9 @@ def ulcer_index_5m(spark, sf_dir):
         sma_crossover_backtest,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     eq = equity_curve(sma_crossover_backtest(bars))
     ulcer = F.sqrt(F.avg(F.col("drawdown") * F.col("drawdown")))
     return eq.groupBy("event_type").agg(
@@ -4888,6 +4763,26 @@ def v_reversal_patterns(spark, sf_dir):
     )
 
 
+def _daily_returns(spark, sf_dir):
+    """(event_type, d, r): each symbol's close-to-close daily return, days
+    without a positive previous and current close dropped."""
+    from pyspark.sql import Window
+
+    ev = load_table(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("d")
+    ).agg(F.max_by("value", "ts_ns").alias("close"))
+    w = Window.partitionBy("event_type").orderBy("d")
+    prev = F.lag("close").over(w)
+    return daily.select(
+        "event_type",
+        "d",
+        F.when(
+            (F.col("close") > 0) & (prev > 0), F.col("close") / prev - 1
+        ).alias("r"),
+    ).where(F.col("r").isNotNull())
+
+
 @register(
     "risk_adjusted_metrics",
     oracle="""
@@ -4937,19 +4832,7 @@ def risk_adjusted_metrics(spark, sf_dir):
     prefix-sum ulp noise both engines accumulate differently."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("d")
-    ).agg(F.max_by("value", "ts_ns").alias("close"))
-    w = Window.partitionBy("event_type").orderBy("d")
-    prev = F.lag("close").over(w)
-    rets = daily.select(
-        "event_type",
-        "d",
-        F.when(
-            (F.col("close") > 0) & (prev > 0), F.col("close") / prev - 1
-        ).alias("r"),
-    ).where(F.col("r").isNotNull())
+    rets = _daily_returns(spark, sf_dir)
     w2 = (
         Window.partitionBy("event_type")
         .orderBy("d")
@@ -5266,19 +5149,7 @@ def max_underwater_duration(spark, sf_dir):
     integers, hash-stable with no rounding policy."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format("ts", "yyyy-MM-dd").alias("d")
-    ).agg(F.max_by("value", "ts_ns").alias("close"))
-    w = Window.partitionBy("event_type").orderBy("d")
-    prev = F.lag("close").over(w)
-    rets = daily.select(
-        "event_type",
-        "d",
-        F.when(
-            (F.col("close") > 0) & (prev > 0), F.col("close") / prev - 1
-        ).alias("r"),
-    ).where(F.col("r").isNotNull())
+    rets = _daily_returns(spark, sf_dir)
     w2 = (
         Window.partitionBy("event_type")
         .orderBy("d")
@@ -5683,22 +5554,10 @@ def ks_temporal_drift_by_type(spark, sf_dir):
 
 
 # --- two-sample ECDF drift: Wasserstein-1 + Cramér-von Mises ---------------
-@register(
-    "ecdf_drift_by_type",
-    oracle="""
-    WITH ev AS (
-      SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v,
-             epoch_ns(ts) AS tns
-      FROM events
-    ),
-    rng AS (
-      SELECT event_type, min(tns) AS lo, max(tns) AS hi FROM ev GROUP BY 1
-    ),
-    tagged AS (
-      SELECT e.event_type, e.v,
-             CASE WHEN 2 * e.tns <= r.lo + r.hi THEN 1 ELSE 2 END AS grp
-      FROM ev e JOIN rng r USING (event_type)
-    ),
+# The oracle twin of _ecdf_two_sample: W1/CvM numerators from a `tagged`
+# CTE of (event_type, v cents, grp ∈ {1,2}); each split rule's oracle
+# builds `tagged` and appends this.
+_ECDF_TWO_SAMPLE_SQL = """
     cell AS (
       SELECT event_type, v,
              sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS c1,
@@ -5736,7 +5595,25 @@ def ks_temporal_drift_by_type(spark, sf_dir):
                  6) AS cvm
     FROM terms
     GROUP BY event_type, n1, n2
-    """,
+"""
+
+
+@register(
+    "ecdf_drift_by_type",
+    oracle="""
+    WITH ev AS (
+      SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v,
+             epoch_ns(ts) AS tns
+      FROM events
+    ),
+    rng AS (
+      SELECT event_type, min(tns) AS lo, max(tns) AS hi FROM ev GROUP BY 1
+    ),
+    tagged AS (
+      SELECT e.event_type, e.v,
+             CASE WHEN 2 * e.tns <= r.lo + r.hi THEN 1 ELSE 2 END AS grp
+      FROM ev e JOIN rng r USING (event_type)
+    ),""" + _ECDF_TWO_SAMPLE_SQL,
 )
 def ecdf_drift_by_type(spark, sf_dir):
     """Two-sample ECDF drift per event_type, completing the classic trio
@@ -5869,45 +5746,7 @@ def _ecdf_two_sample(tagged):
       SELECT event_type, v,
              CASE WHEN rn <= 128 THEN 1 ELSE 2 END AS grp
       FROM ev
-    ),
-    cell AS (
-      SELECT event_type, v,
-             sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS c1,
-             sum(CASE WHEN grp = 2 THEN 1 ELSE 0 END) AS c2
-      FROM tagged GROUP BY 1, 2
-    ),
-    cum AS (
-      SELECT event_type, v, c1, c2,
-             sum(c1) OVER w AS cum1,
-             sum(c2) OVER w AS cum2,
-             lead(v) OVER w AS v_next,
-             sum(c1) OVER (PARTITION BY event_type) AS n1,
-             sum(c2) OVER (PARTITION BY event_type) AS n2
-      FROM cell
-      WINDOW w AS (PARTITION BY event_type ORDER BY v)
-    ),
-    terms AS (
-      SELECT event_type, n1, n2,
-             CAST(cum1 * n2 - cum2 * n1 AS DECIMAL(38,0)) AS d,
-             CAST(COALESCE(v_next - v, 0) AS DECIMAL(38,0)) AS gap,
-             CAST(c1 + c2 AS DECIMAL(38,0)) AS mult
-      FROM cum WHERE n1 > 0 AND n2 > 0
-    )
-    SELECT event_type,
-           CAST(n1 AS BIGINT) AS n1,
-           CAST(n2 AS BIGINT) AS n2,
-           TRY_CAST(sum(abs(d) * gap) AS BIGINT) AS w1_num,
-           round(CAST(sum(abs(d) * gap) AS DOUBLE)
-                 / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE) * 100.0),
-                 6) AS w1,
-           TRY_CAST(sum(d * d * mult) AS BIGINT) AS cvm_num,
-           round(CAST(sum(d * d * mult) AS DOUBLE)
-                 / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)
-                    * power(CAST(n1 + n2 AS DOUBLE), 2)),
-                 6) AS cvm
-    FROM terms
-    GROUP BY event_type, n1, n2
-    """,
+    ),""" + _ECDF_TWO_SAMPLE_SQL,
 )
 def ecdf_drift_first_n_by_type(spark, sf_dir):
     """First-n/rest ECDF drift per event_type — the CERTIFIED batch basis
@@ -6171,14 +6010,7 @@ def _grid_backtest_oracle() -> str:
       FROM lw WHERE l{s + 1} IS NOT NULL"""
         for f, s in _GRID_PAIRS
     )
-    return f"""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY event_type, bucket_start
-    ),
+    return _CLOSE_BARS_5M_CTE + f""",
     g AS (
       SELECT event_type, bucket_start,
              CAST(round(close * 100) AS BIGINT) AS c
@@ -6260,11 +6092,7 @@ def grid_backtest_sma_pairs_5m(spark, sf_dir):
     not a pass."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select(
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
         "event_type",
         "bucket_start",
         F.round(F.col("close") * 100).cast("bigint").alias("c"),
@@ -6379,14 +6207,7 @@ def _ewma_vol_oracle() -> str:
         span=39,
         out="__var",
     )
-    return f"""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY event_type, bucket_start
-    ),
+    return _CLOSE_BARS_5M_CTE + f""",
     r AS (
       SELECT event_type, bucket_start, close,
              lag(close) OVER (PARTITION BY event_type
@@ -6426,11 +6247,9 @@ def ewma_vol_5m(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     w = Window.partitionBy("event_type").orderBy("bucket_start")
     prev = F.lag("close").over(w)
     ret = F.when(
@@ -6455,14 +6274,7 @@ def ewma_vol_5m(spark, sf_dir):
 # --- split-conformal intervals for the naive per-bar forecast --------------
 @register(
     "conformal_naive_intervals",
-    oracle="""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY event_type, bucket_start
-    ),
+    oracle=_CLOSE_BARS_5M_CTE + """,
     r AS (
       SELECT event_type, bucket_start, close,
              abs(close - lag(close) OVER (PARTITION BY event_type
@@ -6511,11 +6323,9 @@ def conformal_naive_intervals(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     w = Window.partitionBy("event_type").orderBy("bucket_start")
     r = bars.select(
         "event_type",
@@ -6561,14 +6371,7 @@ def conformal_naive_intervals(spark, sf_dir):
 # --- pinball (quantile) loss of the naive residual-quantile forecast -------
 @register(
     "pinball_loss_q90_naive",
-    oracle="""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY event_type, bucket_start
-    ),
+    oracle=_CLOSE_BARS_5M_CTE + """,
     r AS (
       SELECT event_type, bucket_start,
              CAST(round((close - lag(close) OVER (PARTITION BY event_type
@@ -6621,11 +6424,9 @@ def pinball_loss_q90_naive(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    bars = ohlcv_bars(
-        ev, ts_col="ts", price_col="value", duration="5 minutes",
-        keys=("event_type",), volume_col="value", order_col="ts_ns",
-    ).select("event_type", "bucket_start", "close")
+    bars = _event_bars(spark, sf_dir, "5 minutes").select(
+        "event_type", "bucket_start", "close"
+    )
     w = Window.partitionBy("event_type").orderBy("bucket_start")
     r = bars.select(
         "event_type",

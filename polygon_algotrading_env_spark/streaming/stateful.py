@@ -449,7 +449,8 @@ def stream_macd(
     state per key (the fast/slow price EMAs and the signal EMA of their
     difference, each seeded at the first observation exactly like
     pandas ``ewm(adjust=False)``). Equivalence with both the pandas
-    recursion and the fused closed-form batch plan is pinned in tests,
+    recursion (``with_macd`` in tests/indicator_refs.py) and the fused
+    closed-form batch plan is pinned in tests,
     as is checkpointed state across a kill/restart. Same cross-batch
     monotonicity guard as :func:`stream_cusum`: rows at or behind the
     last applied event time are dropped, not retro-applied."""
@@ -502,8 +503,8 @@ def stream_kalman_level(
     exactly from the checkpointed p, so a restart resumes the SAME gain
     schedule the batch warm-up evaluates). First observation seeds
     x = y with prior variance r_var and gain 0, matching the batch
-    operator. Equivalence with the sequential recursion is pinned in
-    tests, as is checkpointed state across a kill/restart. Same
+    operator. Equivalence with the sequential recursion
+    (``with_kalman_level`` in tests/indicator_refs.py) is pinned in tests, as is checkpointed state across a kill/restart. Same
     cross-batch monotonicity guard as :func:`stream_cusum`."""
 
     def step(st, px):

@@ -56,77 +56,6 @@ def test_readme_test_count_matches_collection():
     )
 
 
-def test_quoted_scale_metrics_match_scale_detail():
-    """Every 100x ratio quoted in COVERAGE.md / ARCHITECTURE.md must match
-    the committed SCALE_DETAIL.json (round-9 VERDICT item 4 — the quoted
-    spearman/worst-spot numbers went a round stale before this). The pins
-    anchor on stable phrases; rewording a claim must reword its pin."""
-    import json
-
-    base = README.parent
-    detail = json.loads((base / "SCALE_DETAIL.json").read_text())["sf100"]
-    spear = detail["ratio_vs_base"]["spearman_qty_price_by_flag"]
-    (worst_head, worst_head_r), = detail["worst"].items()
-    (worst_spot, worst_spot_r), = detail["spot"]["worst"].items()
-
-    cov = (base / "COVERAGE.md").read_text()
-    m = re.search(r"100× ratio [\d.]+× → ([\d.]+)× in SCALE_DETAIL", cov)
-    assert m, "COVERAGE.md spearman-ratio claim missing or reworded"
-    assert float(m.group(1)) == spear, (
-        f"COVERAGE.md quotes spearman 100x ratio {m.group(1)}; "
-        f"SCALE_DETAIL.json records {spear}"
-    )
-    m = re.search(r"worst `(\w+)` ([\d.]+)× wall for 100× rows", cov)
-    assert m, "COVERAGE.md spot-worst claim missing or reworded"
-    assert (m.group(1), float(m.group(2))) == (worst_spot, worst_spot_r), (
-        f"COVERAGE.md quotes spot worst {m.groups()}; "
-        f"SCALE_DETAIL.json records {worst_spot} {worst_spot_r}"
-    )
-
-    arch = (base / "ARCHITECTURE.md").read_text()
-    m = re.search(r"recorded 100× ratio now reads ([\d.]+)×", arch)
-    assert m, "ARCHITECTURE.md spearman-ratio claim missing or reworded"
-    assert float(m.group(1)) == spear
-    m = re.search(r"\((\w+) worst at ([\d.]+)×", arch)
-    assert m, "ARCHITECTURE.md spot-worst claim missing or reworded"
-    assert (m.group(1), float(m.group(2))) == (worst_spot, worst_spot_r)
-    m = re.search(r"worst headliner (\w+) at ([\d.]+)×", arch)
-    assert m, "ARCHITECTURE.md worst-headliner claim missing or reworded"
-    assert (m.group(1), float(m.group(2))) == (worst_head, worst_head_r)
-
-    # round-11 like-plan claims: the adaptively-gated consumers' zoned
-    # scaling quoted in both docs must match gated_ratio_vs_zoned_base
-    gated = detail["gated_ratio_vs_zoned_base"]
-    for text, src in ((cov, "COVERAGE.md"), (arch, "ARCHITECTURE.md")):
-        m = re.search(r"like-plan zoned (?:ratio|scaling) is ([\d.]+)×", text)
-        m = m or re.search(r"like-plan zoned ratio .*? is ([\d.]+)×", text)
-        assert m, f"{src} like-plan spearman claim missing or reworded"
-        assert float(m.group(1)) == gated["spearman_qty_price_by_flag"], src
-    # r12 kmeans rationale row: its quoted 100× scaling must match the
-    # artifact (the r11 VERDICT item-4 "rationale row + doc-pin" close)
-    m = re.search(r"scales at ([\d.]+)× for 100× data", arch)
-    assert m, "ARCHITECTURE.md kmeans scaling claim missing or reworded"
-    assert float(m.group(1)) == detail["ratio_vs_base"][
-        "kmeans_clusters_embeddings"
-    ]
-
-    m = re.search(
-        r"rsi ([\d.]+)×, hurst ([\d.]+)×, ema ([\d.]+)×, ewma-vol ([\d.]+)×,"
-        r" macd ([\d.]+)×, spearman ([\d.]+)× like-plan",
-        arch,
-    )
-    assert m, "ARCHITECTURE.md gated like-plan table missing or reworded"
-    quoted = [float(g) for g in m.groups()]
-    assert quoted == [
-        gated["rsi_14_per_event_type"],
-        gated["hurst_exponent_by_type"],
-        gated["ema_20_per_event_type"],
-        gated["ewma_vol_5m"],
-        gated["macd_12_26_9_5m"],
-        gated["spearman_qty_price_by_flag"],
-    ], quoted
-
-
 def test_zoned_oracle_artifact_covers_both_shapes_and_matches():
     """The committed ZONED_ORACLE.json (tools/zoned_oracle.py) is the
     durable hash evidence for the shape the 100 TB path runs: every

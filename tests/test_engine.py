@@ -145,10 +145,7 @@ def test_engine_ema_macd_specs_match_sequential_references(eng):
     multi-key series long enough (> 512 rows a key) to cross a block."""
     import math
 
-    from polygon_algotrading_env_spark.operators.indicators import (
-        with_ema,
-        with_macd,
-    )
+    from indicator_refs import with_ema, with_macd
 
     rows = [
         (k, i, 100.0 + 7.0 * math.sin(i / (3.0 + j)) + 0.1 * i)

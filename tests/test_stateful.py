@@ -484,10 +484,8 @@ def test_merged_sorted_restores_cross_chunk_order():
 def test_stream_macd_equals_batch(spark, tmpdir):
     from datetime import datetime, timedelta
 
-    from polygon_algotrading_env_spark.operators.indicators import (
-        with_macd,
-        with_macd_closed_form,
-    )
+    from indicator_refs import with_macd
+    from polygon_algotrading_env_spark.operators.indicators import with_macd_closed_form
     from polygon_algotrading_env_spark.streaming.stateful import stream_macd
 
     t0 = datetime(2024, 1, 1, 10, 0, 0)
@@ -550,7 +548,7 @@ def test_stream_macd_equals_batch(spark, tmpdir):
 def test_stream_macd_state_survives_restart(spark, tmpdir):
     from datetime import datetime, timedelta
 
-    from polygon_algotrading_env_spark.operators.indicators import with_macd
+    from indicator_refs import with_macd
     from polygon_algotrading_env_spark.streaming.stateful import stream_macd
 
     t0 = datetime(2024, 1, 1, 10, 0, 0)
@@ -600,9 +598,7 @@ def test_stream_macd_state_survives_restart(spark, tmpdir):
 def test_stream_kalman_equals_batch_and_survives_restart(spark, tmpdir):
     from datetime import datetime, timedelta
 
-    from polygon_algotrading_env_spark.operators.indicators import (
-        with_kalman_level,
-    )
+    from indicator_refs import with_kalman_level
     from polygon_algotrading_env_spark.streaming.stateful import (
         stream_kalman_level,
     )
