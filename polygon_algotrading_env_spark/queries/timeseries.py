@@ -4391,14 +4391,7 @@ def trade_size_tail_index(spark, sf_dir):
 @register(
     "hurst_exponent_by_type",
     headline=True,
-    oracle="""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY 1, 2
-    ),
+    oracle=_CLOSE_BARS_5M_CTE + """,
     rets AS (
       SELECT event_type,
              CASE WHEN close > 0 AND lag(close) OVER w > 0
@@ -4612,14 +4605,7 @@ def overnight_intraday_returns(spark, sf_dir):
 
 @register(
     "lead_lag_best_correlation",
-    oracle="""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY 1, 2
-    ),
+    oracle=_CLOSE_BARS_5M_CTE + """,
     rets AS (
       SELECT event_type,
              row_number() OVER w AS i,
@@ -4701,14 +4687,7 @@ def lead_lag_best_correlation(spark, sf_dir):
 
 @register(
     "v_reversal_patterns",
-    oracle="""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY 1, 2
-    ),
+    oracle=_CLOSE_BARS_5M_CTE + """,
     seq AS (
       SELECT event_type, bucket_start, close,
              lag(close, 4) OVER w AS c4,
@@ -7001,14 +6980,7 @@ def pacf_returns_lags(spark, sf_dir):
 # --- Haar wavelet energy by scale (multi-resolution volatility) ------------
 @register(
     "haar_energy_5m",
-    oracle="""
-    WITH bars AS (
-      SELECT event_type,
-             time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP))
-               AS bucket_start,
-             arg_max(value, ts) AS close
-      FROM events GROUP BY 1, 2
-    ),
+    oracle=_CLOSE_BARS_5M_CTE + """,
     cb AS (
       SELECT event_type,
              CAST(round(close * 100) AS BIGINT) AS cents,

@@ -4,9 +4,26 @@ Centralizes the configuration the engine depends on:
 
 - AQE on (runtime re-planning, skew-join handling, partition coalescing) —
   per-ticker skew (hot symbols like SPY) is a first-class concern at scale.
-- ``spark.sql.shuffle.partitions`` sized for the local test harness; on a
-  real cluster AQE coalescing makes the static number a ceiling, not a
-  tuning knob.
+- Two partition counts, because batch and streaming read different confs
+  (:func:`shuffle_confs`):
+
+  - Batch: ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``,
+    the number every batch exchange starts from while AQE and its
+    coalescing are on (``SQLConf.numShufflePartitions``). It is sized as
+    a ceiling for AQE to coalesce down from: 32 under ``local[*]``,
+    otherwise ``max(SPARK_GRAFT_CPUS, 8)``.
+  - Streams: ``spark.sql.shuffle.partitions``, one per task slot of the
+    master (``local[3]`` gives 3). Structured Streaming turns AQE off
+    inside a stream, so this is the state partition count a new stream
+    writes into its offset log. Every state partition is loaded,
+    versioned and committed on every micro-batch, rows or not, and runs
+    one Python task per batch under ``applyInPandasWithState``; more
+    partitions than slots only add that fixed cost. A restarted stream
+    keeps the count its checkpoint recorded. Under a cluster master the
+    slots are not known when the session is built, and the stream count
+    is the batch count.
+
+  An explicit ``shuffle_partitions`` sets both.
 - ``spark.sql.legacy.parquet.nanosAsLong=true`` — the driver fixtures store
   ``events.ts`` as parquet TIMESTAMP(NANOS), which Spark otherwise rejects;
   we read it as epoch-nanos bigint and convert in the catalog layer.
@@ -33,6 +50,7 @@ Centralizes the configuration the engine depends on:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -67,6 +85,38 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _task_slots(master: str) -> int | None:
+    """Task slots of a local master, ``None`` for a cluster master."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\s*\d+)?\])?", master.strip())
+    if m is None:
+        return None
+    if m.group(1) == "*":
+        return len(os.sched_getaffinity(0))
+    return int(m.group(1) or 1)
+
+
+def shuffle_confs(
+    master: str, cpus: str, shuffle_partitions: int | None = None
+) -> dict[str, str]:
+    """The stream and batch partition counts of a session on ``master``,
+    with ``cpus`` the value of ``SPARK_GRAFT_CPUS`` (``"*"`` when unset).
+
+    ``spark.sql.shuffle.partitions`` is the state partition count of a new
+    stream: one per task slot. ``initialPartitionNum`` is the batch
+    exchanges' count under AQE. An explicit ``shuffle_partitions`` sets
+    both.
+    """
+    if shuffle_partitions is None:
+        batch = 32 if cpus == "*" else max(int(cpus), 8)
+        stream = _task_slots(master) or batch
+    else:
+        batch = stream = shuffle_partitions
+    return {
+        "spark.sql.shuffle.partitions": str(stream),
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(batch),
+    }
+
+
 def get_spark(
     app_name: str = "polygon-algotrading-env-spark",
     master: str | None = None,
@@ -79,8 +129,6 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 8)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -88,7 +136,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(map=shuffle_confs(master, cpus, shuffle_partitions))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")

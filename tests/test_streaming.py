@@ -2,7 +2,9 @@ from __future__ import annotations
 
 import shutil
 import tempfile
+from contextlib import contextmanager
 from datetime import datetime
+from pathlib import Path
 
 import pytest
 
@@ -351,73 +353,177 @@ def test_engine_checkpoint_manager_refuses_overwrite(spark, tmp_path):
     assert target.read_bytes() == b"first"
 
 
-def test_stream_resumes_checkpoint_of_filecontext_manager(spark, tmp_path):
-    """A page-store bars checkpoint written under Spark's default
-    FileContext manager resumes under the engine's FileSystem manager:
-    the bars equal a batch ohlcv_bars over all pages, none missed or
-    read twice (a re-read page would double its bucket's volume)."""
+STATE_PARTITIONS = "spark.sql.shuffle.partitions"
+BATCH_PARTITIONS = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+
+@contextmanager
+def _confs(spark, confs):
+    """Set session confs for a block, then restore what was there."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _land_page(root, page_no):
+    """Write page ``page_no`` of SPY and TLT: 1-minute bars for minutes
+    4*page_no .. 4*page_no+4, so consecutive pages overlap by one bar."""
     import json as _json
 
+    for sym, base in (("SPY", 100.0), ("TLT", 50.0)):
+        (root / sym).mkdir(parents=True, exist_ok=True)
+        recs = [
+            {"t": i * 60_000, "o": base, "h": base + 1, "l": base - 1,
+             "c": base + (i % 5), "v": 10.0 + i, "vw": base, "n": 2}
+            for i in range(page_no * 4, page_no * 4 + 5)
+        ]
+        (root / sym / f"page-{page_no}.json").write_text(
+            _json.dumps({"results": recs})
+        )
+
+
+def _drain_page_bars(spark, root, ckpt, name):
+    """One availableNow run of the page-store bars stream into the memory
+    table ``name`` (complete mode: the table holds every bar)."""
     from polygon_algotrading_env_spark.streaming.pipeline import (
         stream_bars_from_page_store,
     )
 
-    MIN_MS = 60_000
-    conf = "spark.sql.streaming.checkpointFileManagerClass"
-    root, ckpt = tmp_path / "pages", str(tmp_path / "ckpt")
-
-    def land(page_no):
-        for sym, base in (("SPY", 100.0), ("TLT", 50.0)):
-            (root / sym).mkdir(parents=True, exist_ok=True)
-            recs = [
-                {"t": i * MIN_MS, "o": base, "h": base + 1, "l": base - 1,
-                 "c": base + (i % 5), "v": 10.0 + i, "vw": base, "n": 2}
-                for i in range(page_no * 4, page_no * 4 + 5)  # overlap 1
-            ]
-            (root / sym / f"page-{page_no}.json").write_text(
-                _json.dumps({"results": recs})
-            )
-
-    def drain():
-        q = (
-            stream_bars_from_page_store(spark, str(root), duration="5 minutes")
-            .writeStream.format("memory")
-            .queryName("resumed_bars")
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        assert q.exception() is None
-
-    land(0)
-    land(1)
-    engine_manager = spark.conf.get(conf)
-    spark.conf.set(
-        conf,
-        "org.apache.spark.sql.execution.streaming.checkpointing."
-        "FileContextBasedCheckpointFileManager",
+    q = (
+        stream_bars_from_page_store(spark, str(root), duration="5 minutes")
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        drain()
-    finally:
-        spark.conf.set(conf, engine_manager)
-    # Minutes 8-12 land after the stop; the 5-10 bucket spans the restart.
-    land(2)
-    drain()
+    q.awaitTermination(120)
+    assert q.exception() is None
 
+
+def _assert_page_bars_equal_batch(spark, root, name):
     cols = ("ticker", "bucket_start", "open", "high", "low", "close",
             "volume", "n_trades")
     got = sorted(
         tuple(r[c] for c in cols)
-        for r in spark.sql("select * from resumed_bars").collect()
+        for r in spark.sql(f"select * from {name}").collect()
     )
     want = sorted(
         tuple(r[c] for c in cols)
         for r in _page_store_batch_bars(spark, str(root)).collect()
     )
     assert got == want and len(got) == 6  # 2 symbols x 3 buckets
+
+
+def test_stream_resumes_checkpoint_of_filecontext_manager(spark, tmp_path):
+    """A page-store bars checkpoint written under Spark's default
+    FileContext manager resumes under the engine's FileSystem manager:
+    the bars equal a batch ohlcv_bars over all pages, none missed or
+    read twice (a re-read page would double its bucket's volume)."""
+    conf = "spark.sql.streaming.checkpointFileManagerClass"
+    root, ckpt = tmp_path / "pages", str(tmp_path / "ckpt")
+
+    _land_page(root, 0)
+    _land_page(root, 1)
+    with _confs(spark, {conf: "org.apache.spark.sql.execution.streaming."
+                              "checkpointing.FileContextBasedCheckpointFileManager"}):
+        _drain_page_bars(spark, root, ckpt, "resumed_bars")
+    # Minutes 8-12 land after the stop; the 5-10 bucket spans the restart.
+    _land_page(root, 2)
+    _drain_page_bars(spark, root, ckpt, "resumed_bars")
+    _assert_page_bars_equal_batch(spark, root, "resumed_bars")
+
+
+def _recorded_state_partitions(ckpt):
+    """The state partition count each batch's offset log entry recorded,
+    in batch order."""
+    import json as _json
+
+    entries = [p for p in (Path(ckpt) / "offsets").iterdir() if p.name.isdigit()]
+    return [
+        int(_json.loads(p.read_text().splitlines()[1])["conf"][STATE_PARTITIONS])
+        for p in sorted(entries, key=lambda p: int(p.name))
+    ]
+
+
+def _state_partition_dirs(ckpt):
+    return sum(1 for p in (Path(ckpt) / "state" / "0").iterdir() if p.name.isdigit())
+
+
+def test_shuffle_confs_split_state_from_batch():
+    """A new stream gets one state partition per task slot; batch exchanges
+    keep today's count through AQE's initial partition number; an explicit
+    count sets both."""
+    from polygon_algotrading_env_spark.session import shuffle_confs
+
+    assert shuffle_confs("local[3]", "4") == {
+        STATE_PARTITIONS: "3", BATCH_PARTITIONS: "8",
+    }
+    assert shuffle_confs("local[3]", "4", 8) == {
+        STATE_PARTITIONS: "8", BATCH_PARTITIONS: "8",
+    }
+    assert shuffle_confs("local[4]", "*")[BATCH_PARTITIONS] == "32"
+    assert shuffle_confs("local", "2")[STATE_PARTITIONS] == "1"
+    # A cluster master's slots are unknown when the session is built.
+    assert shuffle_confs("spark://host:7077", "16") == {
+        STATE_PARTITIONS: "16", BATCH_PARTITIONS: "16",
+    }
+
+
+def test_state_partitions_follow_slots_batch_plans_do_not(spark, tmp_path):
+    """Under the split confs of ``local[3]`` with 4 CPUs, a batch aggregate
+    still plans 8 shuffle partitions while a new stream records and keeps
+    3 state partitions."""
+    import re
+
+    import pyspark.sql.functions as F
+
+    from polygon_algotrading_env_spark.session import shuffle_confs
+
+    root, ckpt = tmp_path / "pages", str(tmp_path / "ckpt")
+    _land_page(root, 0)
+    with _confs(spark, shuffle_confs("local[3]", "4")):
+        agg = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+        plan = agg._jdf.queryExecution().executedPlan().toString()
+        assert set(re.findall(r"hashpartitioning\(.*, (\d+)\)", plan)) == {"8"}
+        _drain_page_bars(spark, root, ckpt, "slot_bars")
+    assert _recorded_state_partitions(ckpt) == [3]
+    assert _state_partition_dirs(ckpt) == 3
+
+
+def test_stream_restart_keeps_recorded_state_partitions(spark, tmp_path):
+    """A page-store bars checkpoint written at 8 state partitions resumes at
+    8 on a session whose new streams get one per task slot: the offset log
+    still records 8 and the bars equal a batch ohlcv_bars over all pages,
+    with the 5-10 bucket's state carried across the restart."""
+    from polygon_algotrading_env_spark.session import shuffle_confs
+
+    root, ckpt = tmp_path / "pages", str(tmp_path / "ckpt")
+    _land_page(root, 0)
+    _land_page(root, 1)
+    with _confs(spark, {STATE_PARTITIONS: "8"}):
+        _drain_page_bars(spark, root, ckpt, "rescaled_bars")
+    first = _recorded_state_partitions(ckpt)
+    assert set(first) == {8}
+
+    slots = shuffle_confs(spark.sparkContext.master, "*")
+    assert slots[STATE_PARTITIONS] != "8"
+    _land_page(root, 2)
+    with _confs(spark, slots):
+        _drain_page_bars(spark, root, ckpt, "rescaled_bars")
+    recorded = _recorded_state_partitions(ckpt)
+    assert len(recorded) > len(first) and set(recorded) == {8}
+    assert _state_partition_dirs(ckpt) == 8
+    _assert_page_bars_equal_batch(spark, root, "rescaled_bars")
 
 
 def test_stream_stream_interval_join(spark, tmp_path):

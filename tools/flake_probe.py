@@ -24,7 +24,17 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from polygon_algotrading_env_spark.session import get_spark  # noqa: E402
+from polygon_algotrading_env_spark.session import (  # noqa: E402
+    get_spark,
+    shuffle_confs,
+)
+
+
+def _set_partitions(spark, n: int) -> None:
+    """Set both partition counts of the session (``session.shuffle_confs``):
+    batch exchanges read AQE's initial number, not the shuffle conf."""
+    for k, v in shuffle_confs(spark.sparkContext.master, "*", n).items():
+        spark.conf.set(k, v)
 
 
 def main() -> int:
@@ -43,9 +53,9 @@ def main() -> int:
     for name in names:
         fn = REGISTRY[name].fn
         try:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
+            _set_partitions(spark, 32)
             a = canon(fn(spark, sf_dir).toPandas())
-            spark.conf.set("spark.sql.shuffle.partitions", "7")
+            _set_partitions(spark, 7)
             b = canon(fn(spark, sf_dir).toPandas())
         except Exception as e:  # noqa: BLE001
             print(f"err   {name}: {type(e).__name__}: {e}")
