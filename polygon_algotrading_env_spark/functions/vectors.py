@@ -5,6 +5,14 @@ All of these compile to Catalyst higher-order functions (``zip_with`` /
 serialization — so a brute-force cosine scan stays in whole-stage codegen.
 Elements are cast to double before arithmetic so results are independent of
 the storage precision (the fixture embeddings are float32).
+
+``dot`` is two higher-order functions, ``aggregate(zip_with(a, b,
+(x, y) -> double(x) * double(y)), 0D, +)``: the casts ride inside the
+``zip_with`` lambda, so no ``transform`` pass copies either array per
+row. Each ``F.*`` call costs Py4J round trips to the JVM (``lit`` 3,
+``transform`` 34, ``dot`` 103), so a query that builds many of them pays
+for it in its build call; constant vectors go in as one SQL literal
+(``operators/similarity._query_lit``).
 """
 
 from __future__ import annotations
@@ -19,9 +27,11 @@ def _d(c: Column | str) -> Column:
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
-    """Σ aᵢ·bᵢ (left-to-right accumulation, deterministic)."""
+    """Σ aᵢ·bᵢ (left-to-right accumulation, deterministic). NULL when
+    either array is NULL, holds a NULL element or is shorter (``zip_with``
+    pads it with NULLs)."""
     return F.aggregate(
-        F.zip_with(_d(a), _d(b), lambda x, y: x * y),
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
         lambda acc, x: acc + x,
     )

@@ -137,11 +137,12 @@ def label_topk_eval(
     the big side); both normalizer lookups are literal prefix-sum arrays
     indexed by exact integers, so both engines divide identical doubles."""
     from polygon_algotrading_env_spark.functions.vectors import cosine
+    from polygon_algotrading_env_spark.operators.similarity import _query_lit
 
     qstructs = [
         F.struct(
             F.lit(int(qid)).alias("qid"),
-            F.array(*[F.lit(float(x)) for x in qvec]).alias("qvec"),
+            _query_lit(qvec).alias("qvec"),
             F.lit(int(qlabel)).alias("qlabel"),
         )
         for qid, qvec, qlabel in query_rows

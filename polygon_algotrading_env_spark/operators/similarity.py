@@ -20,6 +20,8 @@ Two tiers, both DataFrame plans:
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -27,11 +29,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import IntegerType
 
+from polygon_algotrading_env_spark.catalog import read_parquet
 from polygon_algotrading_env_spark.functions.vectors import cosine, dot
 
 
+def _double_sql(x: float) -> str:
+    """A double as a Spark SQL literal that parses back to the same bits:
+    ``repr`` is the shortest round-tripping decimal, and the parser reads
+    it with ``Double.parseDouble``."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    return f"double('{x!r}')"
+
+
 def _query_lit(query_vec: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in query_vec])
+    """The constant ``array<double>`` of ``query_vec`` as one SQL
+    expression: one Py4J round trip, where ``F.array`` over ``F.lit``
+    calls takes three per element. The optimizer folds it to one
+    literal."""
+    return F.expr("array(" + ", ".join(map(_double_sql, query_vec)) + ")")
 
 
 def cosine_topk(
@@ -279,7 +296,9 @@ def lsh_ann_topk_indexed(
     from pyspark.sql.types import StructType as _St
 
     probe = srp_probe_buckets(spark, query_vec, n_planes, seed, multiprobe_hamming)
-    candidates = spark.read.parquet(index_path).filter(F.col("bucket").isin(probe))
+    candidates = read_parquet(spark, index_path).filter(
+        F.col("bucket").isin(probe)
+    )
     if isinstance(candidates.schema[vec_col].dataType, _St):
         from polygon_algotrading_env_spark.functions.vectors import dequantize_int8
 
@@ -420,7 +439,7 @@ def ivf_topk_indexed(
     ``n_probe`` nearest cells (PartitionFilters on ``cell``, no assignment
     UDF anywhere in the probe plan — asserted in tests), then score."""
     probe = ivf_probe_cells(centroids, query_vec, n_probe)
-    cands = spark.read.parquet(index_path).filter(F.col("cell").isin(probe))
+    cands = read_parquet(spark, index_path).filter(F.col("cell").isin(probe))
     return _score_topk(cands, query_vec, k, id_col, vec_col, score_decimals)
 
 

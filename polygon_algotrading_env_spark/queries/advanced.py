@@ -15,6 +15,9 @@ import pyspark.sql.functions as F
 
 from polygon_algotrading_env_spark.catalog import load_table
 from polygon_algotrading_env_spark.queries import register
+from polygon_algotrading_env_spark.queries._pagerank_sql import (
+    PAGERANK_ROUNDS_CTE,
+)
 
 
 # --- left outer join + two-level aggregate (TPC-H Q13 shape) --------------
@@ -508,29 +511,9 @@ def scd2_customer_refresh(spark, sf_dir):
       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
       FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
       WHERE a.l_partkey <> b.l_partkey
-    ),
-    verts AS (SELECT DISTINCT u AS id FROM edges),
-    deg AS (SELECT u, count(*)::DOUBLE AS outdeg FROM edges GROUP BY 1),
-    ranks(iter, id, rank) AS (
-      SELECT 0, id, 1.0 / (SELECT count(*) FROM verts) FROM verts
-      UNION ALL
-      SELECT iter + 1, id,
-             (1 - 0.85) / (SELECT count(*) FROM verts)
-             + (0.85 / (SELECT count(*) FROM verts))
-               * (1.0 - sum(inflow) OVER ())
-             + 0.85 * inflow
-      FROM (
-        SELECT r.iter, v.id, COALESCE(c.inflow, 0.0) AS inflow
-        FROM (SELECT DISTINCT iter FROM ranks) r
-        CROSS JOIN verts v
-        LEFT JOIN (
-          SELECT e.v AS id, sum(ranks.rank / d.outdeg) AS inflow
-          FROM ranks JOIN edges e ON ranks.id = e.u JOIN deg d ON d.u = e.u
-          GROUP BY e.v
-        ) c ON c.id = v.id
-      )
-      WHERE iter < 6
-    )
+    ),"""
+    + PAGERANK_ROUNDS_CTE
+    + """
     SELECT id AS l_partkey, round(rank, 8) AS rank
     FROM ranks WHERE iter = 6
     ORDER BY round(rank, 8) DESC, id

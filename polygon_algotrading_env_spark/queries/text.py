@@ -29,6 +29,9 @@ from polygon_algotrading_env_spark.operators.dedup import (
     winnow_candidate_pairs,
 )
 from polygon_algotrading_env_spark.queries import register
+from polygon_algotrading_env_spark.queries._pagerank_sql import (
+    PAGERANK_ROUNDS_CTE,
+)
 
 
 # --- exact dedup profile (D1 generalized to content dedup) ----------------
@@ -2725,29 +2728,9 @@ def pmi_collocations_topk(spark, sf_dir):
         UNION ALL
         SELECT t2 AS u, t1 AS v FROM raw
       )
-    ),
-    verts AS (SELECT DISTINCT u AS id FROM edges),
-    deg AS (SELECT u, count(*)::DOUBLE AS outdeg FROM edges GROUP BY 1),
-    ranks(iter, id, rank) AS (
-      SELECT 0, id, 1.0 / (SELECT count(*) FROM verts) FROM verts
-      UNION ALL
-      SELECT iter + 1, id,
-             (1 - 0.85) / (SELECT count(*) FROM verts)
-             + (0.85 / (SELECT count(*) FROM verts))
-               * (1.0 - sum(inflow) OVER ())
-             + 0.85 * inflow
-      FROM (
-        SELECT r.iter, v.id, COALESCE(c.inflow, 0.0) AS inflow
-        FROM (SELECT DISTINCT iter FROM ranks) r
-        CROSS JOIN verts v
-        LEFT JOIN (
-          SELECT e.v AS id, sum(ranks.rank / d.outdeg) AS inflow
-          FROM ranks JOIN edges e ON ranks.id = e.u JOIN deg d ON d.u = e.u
-          GROUP BY e.v
-        ) c ON c.id = v.id
-      )
-      WHERE iter < 6
-    )
+    ),"""
+    + PAGERANK_ROUNDS_CTE
+    + r"""
     SELECT id AS token, round(rank, 8) AS rank
     FROM ranks WHERE iter = 6
     ORDER BY round(rank, 8) DESC, id

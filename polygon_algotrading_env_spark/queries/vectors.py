@@ -15,7 +15,7 @@ import tempfile
 
 import pyspark.sql.functions as F
 
-from polygon_algotrading_env_spark.catalog import load_table
+from polygon_algotrading_env_spark.catalog import load_table, read_parquet
 from polygon_algotrading_env_spark.functions.vectors import cosine, dot, norm
 from polygon_algotrading_env_spark.operators.similarity import (
     _query_lit,
@@ -182,10 +182,8 @@ def _md5_planes(n_planes: int, dim: int) -> list[list[float]]:
 def _srp_bucket_expr(planes: list[list[float]]):
     bucket = F.lit(0).cast("bigint")
     for p, hv in enumerate(planes):
-        plane_lit = F.array(*[F.lit(x) for x in hv])
-        bucket = bucket + (dot("embedding", plane_lit) >= 0).cast("bigint") * (
-            1 << p
-        )
+        above = dot("embedding", _query_lit(hv)) >= 0
+        bucket = bucket + above.cast("bigint") * (1 << p)
     return bucket
 
 
@@ -248,7 +246,7 @@ def lsh_ann_topk_q(spark, sf_dir):
         if acc >= 0:
             qbucket |= 1 << p
     probe = [qbucket] + [qbucket ^ (1 << p) for p in range(_SRP_PLANES)]
-    cand = spark.read.parquet(idx).filter(F.col("bucket").isin(probe))
+    cand = read_parquet(spark, idx).filter(F.col("bucket").isin(probe))
     return (
         cand.select(
             "vec_id",
@@ -340,7 +338,7 @@ def _ivf_cell_expr(cents: list[list[float]]):
         d2i = F.round(
             (
                 dot("embedding", "embedding")
-                - 2 * dot("embedding", F.array(*[F.lit(x) for x in cv]))
+                - 2 * dot("embedding", _query_lit(cv))
                 + F.lit(cc)
             )
             * 1e6
@@ -385,7 +383,7 @@ def ivf_ann_topk(spark, sf_dir):
             cc += xx * xx
         grid.append((int(math.floor((qvv - 2 * qc + cc) * 1e6 + 0.5)), j))
     probe = [j for _, j in sorted(grid)[:4]]
-    cand = spark.read.parquet(idx).filter(F.col("cell").isin(probe))
+    cand = read_parquet(spark, idx).filter(F.col("cell").isin(probe))
     return (
         cand.select(
             "vec_id",
@@ -795,14 +793,13 @@ def pq_ann_topk(spark, sf_dir):
             for xx in cv:
                 cc += xx * xx
             d2i = F.round(
-                (svv - 2 * dot(sv, F.array(*[F.lit(x) for x in cv])) + F.lit(cc))
+                (svv - 2 * dot(sv, _query_lit(cv)) + F.lit(cc))
                 * 1e6
             ).cast("bigint")
             cands.append(F.struct(d2i.alias("d"), F.lit(k).alias("k")))
         code = F.least(*cands).getField("k")
-        adc = adc + F.element_at(
-            F.array(*[F.lit(v).cast("bigint") for v in lut[j]]), code + 1
-        )
+        lut_row = F.expr("array(" + ", ".join(f"{v}L" for v in lut[j]) + ")")
+        adc = adc + F.element_at(lut_row, code + 1)
     cand = (
         emb.select("vec_id", "embedding", adc.alias("__adc"))
         .orderBy(F.col("__adc").asc(), F.col("vec_id").asc())

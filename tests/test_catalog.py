@@ -91,3 +91,83 @@ def test_validate_catalog_reports_broken_table(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(cat, "load_table", broken)
     with _pytest.raises(SchemaContractError, match="region.*r_name"):
         cat.validate_catalog(spark, sf_dir)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under Spark job group ``group``; return (result, job
+    count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _plan_text(df, phase):
+    import re
+
+    plan = getattr(df._jdf.queryExecution(), phase)().toString()
+    return re.sub(r"#\d+L?", "#", plan)
+
+
+def test_warm_load_table_starts_no_job_and_keeps_schema_and_plan(
+    spark, sf_dir, monkeypatch
+):
+    """A table's schema is inferred once: a warm ``load_table`` starts no
+    Spark job, and its schema and plans equal those of an inferring
+    read."""
+    from polygon_algotrading_env_spark import catalog as cat
+
+    monkeypatch.setattr(cat, "_SCHEMA_CACHE", {})
+    inferred, cold_jobs = _jobs_in_group(
+        spark,
+        "test-load-cold",
+        lambda: {t: load_table(spark, sf_dir, t) for t in TABLES},
+    )
+    assert cold_jobs >= 1
+    warm, warm_jobs = _jobs_in_group(
+        spark,
+        "test-load-warm",
+        lambda: {t: load_table(spark, sf_dir, t) for t in TABLES},
+    )
+    assert warm_jobs == 0
+    for t in TABLES:
+        assert warm[t].schema == inferred[t].schema, t
+        for phase in ("analyzed", "optimizedPlan"):
+            assert _plan_text(warm[t], phase) == _plan_text(
+                inferred[t], phase
+            ), (t, phase)
+
+
+def test_rewritten_table_is_inferred_and_counted_again(spark, tmp_path):
+    """A parquet file rewritten at the same path is a new file identity:
+    its schema is inferred again (the extra column shows) and its
+    footer row count is read again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from polygon_algotrading_env_spark.catalog import table_rows
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([0, 1], pa.int32())}), path
+    )
+    first = load_table(spark, str(tmp_path), "region")
+    assert first.columns == ["r_regionkey"]
+    assert table_rows(str(tmp_path), "region") == 2
+    pq.write_table(
+        pa.table(
+            {
+                "r_regionkey": pa.array([0, 1, 2], pa.int32()),
+                "r_name": pa.array(["a", "b", "c"]),
+            }
+        ),
+        path,
+    )
+    again = load_table(spark, str(tmp_path), "region")
+    assert again.columns == ["r_regionkey", "r_name"]
+    assert again.count() == 3
+    assert table_rows(str(tmp_path), "region") == 3

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import hashlib
+
 import pyspark.sql.functions as F
+from pyspark.sql.types import ArrayType, DoubleType
 
 from polygon_algotrading_env_spark.catalog import load_table
 from polygon_algotrading_env_spark.functions.vectors import (
@@ -70,3 +73,79 @@ def test_quantized_cosine_ranking_preserved(spark, sf_dir):
         .orderBy(F.desc("s"), "vec_id").limit(5).collect()
     ]
     assert len(set(exact) & set(approx)) >= 4
+
+
+def test_query_lit_is_bit_exact_and_folds_to_one_literal(spark):
+    """A constant vector built as one SQL expression reads back with the
+    same bits, and the optimizer folds it to a single Literal."""
+    import struct
+    import sys
+
+    from polygon_algotrading_env_spark.operators.similarity import _query_lit
+
+    vals = [
+        0.1, -0.1, 1e-05, 1e16, 5e-324, -0.0, 2.5e-310,
+        sys.float_info.max, -sys.float_info.max, 1 / 3, 7, 0.0,
+    ]
+    vals += [int(hashlib.md5(f"srp|0|{d}".encode()).hexdigest()[:8], 16)
+             / 4294967295.0 * 2 - 1 for d in range(64)]
+    df = spark.range(1).select(_query_lit(vals).alias("v"))
+    assert df.schema["v"].dataType == ArrayType(DoubleType(), False)
+    got = df.collect()[0]["v"]
+    bits = [struct.pack(">d", float(x)) for x in vals]
+    assert [struct.pack(">d", x) for x in got] == bits
+    proj = df._jdf.queryExecution().optimizedPlan().projectList()
+    assert proj.head().child().getClass().getSimpleName() == "Literal"
+    special = spark.range(1).select(
+        _query_lit([float("inf"), float("-inf"), float("nan")]).alias("v")
+    ).collect()[0]["v"]
+    assert special[:2] == [float("inf"), float("-inf")]
+    assert special[2] != special[2]  # NaN
+
+
+def _ref_dot(a, b):
+    """Python left-to-right Σ aᵢ·bᵢ in double, NULL-propagating, with the
+    shorter side padded by NULLs."""
+    if a is None or b is None:
+        return None
+    acc = 0.0
+    for i in range(max(len(a), len(b))):
+        x = a[i] if i < len(a) else None
+        y = b[i] if i < len(b) else None
+        if x is None or y is None:
+            return None
+        acc += float(x) * float(y)
+    return acc
+
+
+def test_dot_and_cosine_match_left_to_right_reference(spark):
+    import math
+
+    from polygon_algotrading_env_spark.functions.vectors import dot
+
+    rows = [
+        (1, [0.1, -0.7, 3.3, 1e-3], [2.5, 0.3, -1.1, 7.0]),
+        (2, [1.0, 2.0], [3.0, 4.0]),
+        (3, None, [1.0]),
+        (4, [1.0, None, 2.0], [1.0, 1.0, 1.0]),
+        (5, [1.0, 2.0, 3.0], [1.0, 2.0]),
+        (6, [0.0, 0.0], [1.0, 2.0]),
+        (7, [], []),
+    ]
+    df = spark.createDataFrame(rows, "id int, a array<float>, b array<float>")
+    out = df.select(
+        "id", "a", "b",
+        dot("a", "b").alias("dot"),
+        cosine("a", "b").alias("cos"),
+    ).orderBy("id").collect()
+    assert len(out) == len(rows)
+    for r in out:
+        a, b = r["a"], r["b"]  # float32 values, exact as Python floats
+        assert r["dot"] == _ref_dot(a, b), r["id"]
+        ab, aa, bb = _ref_dot(a, b), _ref_dot(a, a), _ref_dot(b, b)
+        if ab is None or aa is None or bb is None:
+            ref_cos = None
+        else:
+            den = math.sqrt(aa) * math.sqrt(bb)
+            ref_cos = None if den == 0 else ab / den
+        assert r["cos"] == ref_cos, r["id"]
