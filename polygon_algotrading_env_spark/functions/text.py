@@ -43,15 +43,25 @@ def word_tokens(text: Column | str) -> Column:
 def char_ngrams(text: Column | str, n: int = 3) -> Column:
     """All character n-grams (shingles) of the normalized text, as an array.
 
-    Built via sequence+transform (JVM-side), not a Python UDF.
+    Text shorter than ``n`` characters gives the one-element array of the
+    whole lowered text; NULL text gives NULL.
+
+    One ``regexp_extract_all`` pass, linear in the text length: an empty
+    match at every position whose lookahead captures the next ``n``
+    characters (``(?s)`` so line breaks count as characters). The obvious
+    ``transform(sequence(1, len-n+1), i -> substr(lower(text), i, n))``
+    is quadratic: a higher-order-function lambda runs interpreted, with no
+    common-subexpression elimination, so ``lower(text)`` is rebuilt for
+    every shingle (0.69 s of executor CPU against 0.08 s to explode the
+    distinct 5-grams of 500 ~300-char documents). The ``(?!\\p{Cs})``
+    guard keeps the match on code-point boundaries: after an empty match
+    Java's matcher steps one UTF-16 unit, which lands on the low half of
+    a surrogate pair (an emoji, a math letter) and would emit one extra
+    shingle starting there.
     """
     t = F.lower(_c(text))
-    length = F.length(t)
-    return F.when(length < n, F.array(t)).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), length - F.lit(n - 1)),
-            lambda i: t.substr(i, F.lit(n)),
-        )
+    return F.when(F.length(t) < n, F.array(t)).otherwise(
+        F.regexp_extract_all(t, F.lit(r"(?s)(?!\p{Cs})(?=(.{%d}))" % n), 1)
     )
 
 

@@ -158,7 +158,7 @@ def label_topk_eval(
         .select(
             F.col("q.qid").alias("qid"),
             "cid",
-            F.round(cosine("cvec", F.col("q.qvec")), 6).alias("score"),
+            F.round(cosine("cvec", "q.qvec"), 6).alias("score"),
             _flag(F.col("clabel") == F.col("q.qlabel")).alias("rel"),
         )
     )

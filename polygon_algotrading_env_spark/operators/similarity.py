@@ -20,8 +20,6 @@ Two tiers, both DataFrame plans:
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -30,25 +28,19 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import IntegerType
 
 from polygon_algotrading_env_spark.catalog import read_parquet
-from polygon_algotrading_env_spark.functions.vectors import cosine, dot
-
-
-def _double_sql(x: float) -> str:
-    """A double as a Spark SQL literal that parses back to the same bits:
-    ``repr`` is the shortest round-tripping decimal, and the parser reads
-    it with ``Double.parseDouble``."""
-    x = float(x)
-    if math.isfinite(x):
-        return f"{x!r}D"
-    return f"double('{x!r}')"
+from polygon_algotrading_env_spark.functions.vectors import (
+    cosine,
+    dot,
+    vector_sql,
+)
 
 
 def _query_lit(query_vec: list[float]) -> Column:
     """The constant ``array<double>`` of ``query_vec`` as one SQL
-    expression: one Py4J round trip, where ``F.array`` over ``F.lit``
-    calls takes three per element. The optimizer folds it to one
-    literal."""
-    return F.expr("array(" + ", ".join(map(_double_sql, query_vec)) + ")")
+    expression (:func:`vector_sql`): one Py4J round trip, where
+    ``F.array`` over ``F.lit`` calls takes three per element. The
+    optimizer folds it to one literal."""
+    return F.expr(vector_sql(query_vec))
 
 
 def cosine_topk(

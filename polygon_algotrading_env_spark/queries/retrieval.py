@@ -1026,10 +1026,10 @@ def rrf_hybrid_retrieval(spark, sf_dir):
     from polygon_algotrading_env_spark.operators.retrieval import (
         bm25_scores,
     )
-    from polygon_algotrading_env_spark.operators.similarity import (
-        _query_lit,
+    from polygon_algotrading_env_spark.functions.vectors import (
+        cosine,
+        vector_sql,
     )
-    from polygon_algotrading_env_spark.functions.vectors import cosine
     from polygon_algotrading_env_spark.queries.vectors import _query_vec
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1044,7 +1044,7 @@ def rrf_hybrid_retrieval(spark, sf_dir):
     vec_top = (
         emb.select(
             F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("embedding"), _query_lit(qv)), 6).alias("s"),
+            F.round(cosine("embedding", vector_sql(qv)), 6).alias("s"),
         )
         .orderBy(F.desc("s"), "doc_id")
         .limit(50)

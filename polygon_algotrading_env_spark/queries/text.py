@@ -517,12 +517,11 @@ _MH_BAND_CAND_SQL = """
 _MH_AGREE_SQL = " + ".join(f"(sa.h{i} = sb.h{i})::INT" for i in range(_MH_N))
 
 
-def _md5_band_cand_df(sig):
-    """Banded candidate pairs (2 bands × 4 rows) from an md5-MinHash
-    signature relation — the shared LSH candidate generator behind
-    minhash_md5_band_pairs / ngram_jaccard_near_dup /
-    minhash_recall_report. (band, 4-hash key) equi-join, never
-    all-pairs."""
+def _md5_band_join(sig, *carry: str):
+    """Banded (2 bands × 4 rows) self-join of an md5-MinHash signature
+    relation: one row per (band, doc pair) whose 4-hash band keys match,
+    ``doc_id`` ordered l < r, each side keeping its ``carry`` columns.
+    (band, 4-hash key) equi-join, never all-pairs."""
     band_structs = [
         F.struct(
             F.lit(bnd).alias("b"),
@@ -534,12 +533,20 @@ def _md5_band_cand_df(sig):
         for bnd in range(2)
     ]
     bands = sig.select(
-        "doc_id", F.explode(F.array(*band_structs)).alias("bk")
-    ).select("doc_id", "bk.b", "bk.x", "bk.y", "bk.z", "bk.w")
+        "doc_id", *carry, F.explode(F.array(*band_structs)).alias("bk")
+    ).select("doc_id", *carry, "bk.b", "bk.x", "bk.y", "bk.z", "bk.w")
     l, r = bands.alias("l"), bands.alias("r")
+    return l.join(r, ["b", "x", "y", "z", "w"]).where(
+        F.col("l.doc_id") < F.col("r.doc_id")
+    )
+
+
+def _md5_band_cand_df(sig):
+    """Banded candidate pairs (2 bands × 4 rows) from an md5-MinHash
+    signature relation — the shared LSH candidate generator behind
+    ngram_jaccard_near_dup / minhash_recall_report."""
     return (
-        l.join(r, ["b", "x", "y", "z", "w"])
-        .where(F.col("l.doc_id") < F.col("r.doc_id"))
+        _md5_band_join(sig)
         .select(
             F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b")
         )
@@ -551,6 +558,9 @@ def _mh_sig_df(spark, sf_dir):
     """md5-MinHash signature relation: explode + one grouped aggregation
     (8 min()s on one doc_id shuffle whose partial aggregation collapses
     map-side, so the exchange carries ~|docs|x9 longs, not shingles).
+    Returned lazily, never checkpointed: a consumer that reads it twice
+    in one plan (the band self-join of ``_md5_agreeing_pairs``) gets one
+    scan and shuffle, the second read a ``ReusedExchange`` of the first.
 
     Two A/Bs behind this shape (r12 VERDICT item 7, the b8a97ec
     measure-don't-assume discipline):
@@ -597,29 +607,33 @@ def _mh_sig_df(spark, sf_dir):
 
 def _md5_agreeing_pairs(spark, sf_dir, min_equal: int):
     """Banded md5-MinHash candidate pairs whose signatures agree on at least
-    ``min_equal`` of the 8 hashes, with the count as ``n_equal``."""
-    sig = _mh_sig_df(spark, sf_dir).localCheckpoint(eager=True)
-    cand = _md5_band_cand_df(sig)
-    sa = sig.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"h{i}").alias(f"a{i}") for i in range(_MH_N)],
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"h{i}").alias(f"b{i}") for i in range(_MH_N)],
-    )
+    ``min_equal`` of the 8 hashes, with the count as ``n_equal``.
+
+    Each band row carries its doc's whole signature, so ``n_equal`` is
+    computed on the band join itself and no join goes back to ``sig``. A
+    pair that meets in both bands has the same ``n_equal`` both times, so
+    ``distinct()`` on (id_a, id_b, n_equal) is the candidate dedup. ``sig``
+    then has two consumers, the two sides of one self-join, and AQE
+    reuses its exchange: the executed plan scans ``documents`` once and
+    shows a ``ReusedExchange`` for the second side. No checkpoint is
+    needed, and the build call starts no job."""
+    hs = [f"h{i}" for i in range(_MH_N)]
     n_equal = sum(
         (
-            (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
-            for i in range(_MH_N)
+            (F.col(f"l.{h}") == F.col(f"r.{h}")).cast("int")
+            for h in hs
         ),
         F.lit(0),
     ).cast("bigint")
     return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", n_equal.alias("n_equal"))
+        _md5_band_join(_mh_sig_df(spark, sf_dir), *hs)
+        .select(
+            F.col("l.doc_id").alias("id_a"),
+            F.col("r.doc_id").alias("id_b"),
+            n_equal.alias("n_equal"),
+        )
         .where(F.col("n_equal") >= min_equal)
+        .distinct()
     )
 
 
@@ -660,12 +674,12 @@ def minhash_md5_band_pairs(spark, sf_dir):
     signature → band bucket → equi-join → estimate) cross-engine in
     EXACT integer arithmetic. The join is (band, key) equi — never
     all-pairs — the same shuffle shape as the production banded join.
-    The signature relation feeds THREE consumers (band fan-out + both
-    sides of the estimate join), so it's checkpointed once — measured
-    ~12% at sf0.1 (AQE exchange reuse already dedupes most of the
-    recompute locally), but the guarantee matters at cluster scale,
-    where a reuse miss would re-run the full corpus shingle+md5 scan
-    three times. Dominant cost is the one unavoidable signature scan."""
+    Each band row carries the whole signature, so the agreement count is
+    taken on the band join and the signature relation has two consumers,
+    the two sides of that self-join. AQE reuses its exchange (one scan of
+    ``documents``, a ``ReusedExchange`` for the second side), so nothing
+    is checkpointed and the build call starts no Spark job. Dominant cost
+    is the one unavoidable signature scan."""
     return _md5_agreeing_pairs(spark, sf_dir, 6)
 
 
@@ -803,18 +817,15 @@ def winnow_md5_overlap_pairs(spark, sf_dir):
     keep the salad corpus's ubiquitous short overlaps out."""
     from pyspark.sql import Window
 
+    from polygon_algotrading_env_spark.functions.text import char_ngrams
+
     k, w, min_shared = 16, 16, 8
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    t = F.lower(F.col("text"))
-    n = F.length(t)
+    # Text under k chars has no gram here (char_ngrams would give the
+    # whole text as one).
     grams = F.when(
-        n < k, F.array().cast("array<string>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(k - 1)),
-            lambda i: t.substr(i, F.lit(k)),
-        )
-    )
+        F.length(F.lower(F.col("text"))) < k, F.array().cast("array<string>")
+    ).otherwise(char_ngrams("text", k))
     ex = docs.select("doc_id", F.posexplode(grams).alias("pos", "g")).select(
         "doc_id",
         "pos",

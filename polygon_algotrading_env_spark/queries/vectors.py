@@ -16,9 +16,14 @@ import tempfile
 import pyspark.sql.functions as F
 
 from polygon_algotrading_env_spark.catalog import load_table, read_parquet
-from polygon_algotrading_env_spark.functions.vectors import cosine, dot, norm
+from polygon_algotrading_env_spark.functions.vectors import (
+    cosine,
+    dot,
+    dot_sql,
+    norm,
+    vector_sql,
+)
 from polygon_algotrading_env_spark.operators.similarity import (
-    _query_lit,
     cosine_topk,
     pairwise_cosine_topk,
 )
@@ -180,11 +185,15 @@ def _md5_planes(n_planes: int, dim: int) -> list[list[float]]:
 
 
 def _srp_bucket_expr(planes: list[list[float]]):
-    bucket = F.lit(0).cast("bigint")
-    for p, hv in enumerate(planes):
-        above = dot("embedding", _query_lit(hv)) >= 0
-        bucket = bucket + above.cast("bigint") * (1 << p)
-    return bucket
+    """Bit p of the bucket is set when embedding·plane_p ≥ 0, built as
+    one SQL string: one Py4J call, not ~100 per plane."""
+    return F.expr(
+        " + ".join(
+            f"CAST({dot_sql('embedding', vector_sql(hv))} >= 0 AS BIGINT)"
+            f" * {1 << p}"
+            for p, hv in enumerate(planes)
+        )
+    )
 
 
 @register(
@@ -250,7 +259,7 @@ def lsh_ann_topk_q(spark, sf_dir):
     return (
         cand.select(
             "vec_id",
-            F.round(cosine("embedding", _query_lit(qv)), 6).alias("score"),
+            F.round(cosine("embedding", vector_sql(qv)), 6).alias("score"),
         )
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(20)
@@ -338,7 +347,7 @@ def _ivf_cell_expr(cents: list[list[float]]):
         d2i = F.round(
             (
                 dot("embedding", "embedding")
-                - 2 * dot("embedding", _query_lit(cv))
+                - 2 * dot("embedding", vector_sql(cv))
                 + F.lit(cc)
             )
             * 1e6
@@ -387,7 +396,7 @@ def ivf_ann_topk(spark, sf_dir):
     return (
         cand.select(
             "vec_id",
-            F.round(cosine("embedding", _query_lit(qv)), 6).alias("score"),
+            F.round(cosine("embedding", vector_sql(qv)), 6).alias("score"),
         )
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(20)
@@ -633,12 +642,11 @@ def srp_topk_reranked(spark, sf_dir):
             acc += x * y
         if acc >= 0:
             qbucket |= 1 << p
-    cand = emb.where(
-        _srp_bucket_expr(planes) == F.lit(qbucket).cast("bigint")
-    )
+    cand = emb.where(_srp_bucket_expr(planes) == qbucket)
     return (
         cand.select(
-            "vec_id", F.round(cosine("embedding", _query_lit(qv)), 6).alias("score")
+            "vec_id",
+            F.round(cosine("embedding", vector_sql(qv)), 6).alias("score"),
         )
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(10)
@@ -784,7 +792,7 @@ def pq_ann_topk(spark, sf_dir):
 
     adc = F.lit(0).cast("bigint")
     for j in range(_PQ_M):
-        sv = F.slice("embedding", j * sub_d + 1, sub_d)
+        sv = f"slice(embedding, {j * sub_d + 1}, {sub_d})"
         svv = dot(sv, sv)
         cands = []
         for k in range(_PQ_K):
@@ -793,7 +801,7 @@ def pq_ann_topk(spark, sf_dir):
             for xx in cv:
                 cc += xx * xx
             d2i = F.round(
-                (svv - 2 * dot(sv, _query_lit(cv)) + F.lit(cc))
+                (svv - 2 * dot(sv, vector_sql(cv)) + F.lit(cc))
                 * 1e6
             ).cast("bigint")
             cands.append(F.struct(d2i.alias("d"), F.lit(k).alias("k")))
@@ -808,7 +816,7 @@ def pq_ann_topk(spark, sf_dir):
     return (
         cand.select(
             "vec_id",
-            F.round(cosine("embedding", _query_lit(qv)), 6).alias("score"),
+            F.round(cosine("embedding", vector_sql(qv)), 6).alias("score"),
         )
         .orderBy(F.col("score").desc(), F.col("vec_id").asc())
         .limit(20)

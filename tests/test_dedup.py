@@ -266,3 +266,76 @@ def test_minhash_index_streaming_foreachbatch(spark, tmp_path):
         for r in minhash_candidate_pairs(b1.unionByName(b2)).collect()
     }
     assert got == full and (1, 3) in got
+
+
+def test_char_ngrams_matches_substring_reference(spark):
+    """The linear regex shingler gives exactly the shingles of the
+    substring form it replaced, on surrogate pairs (emoji, math letters),
+    case mappings that change length, line breaks, short, empty and NULL
+    text."""
+    from polygon_algotrading_env_spark.functions.text import char_ngrams
+
+    def reference(n):
+        t = F.lower(F.col("text"))
+        length = F.length(t)
+        return F.when(length < n, F.array(t)).otherwise(
+            F.transform(
+                F.sequence(F.lit(1), length - F.lit(n - 1)),
+                lambda i: t.substr(i, F.lit(n)),
+            )
+        )
+
+    texts = [
+        "ab😀cdefg", "😀" * 6, "x𝔸𝔹ℂ𝔻𝔼y", "İSTANBUL city", "Straße groß",
+        "a\nbcd\r\nef", "", "abc", None,
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    ns = (3, 4, 5, 8, 16)
+    out = df.select(
+        "i",
+        *[char_ngrams("text", n).alias(f"got{n}") for n in ns],
+        *[reference(n).alias(f"ref{n}") for n in ns],
+    ).collect()
+    assert len(out) == len(texts)
+    for r in out:
+        for n in ns:
+            assert r[f"got{n}"] == r[f"ref{n}"], (texts[r["i"]], n)
+    emoji = next(r for r in out if r["i"] == 0)
+    assert emoji["got5"] == ["ab😀cd", "b😀cde", "😀cdef", "cdefg"]
+
+
+def _final_plan(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()
+    return plan.toString()
+
+
+def test_minhash_md5_band_pairs_builds_without_jobs_and_scans_once(
+    spark, sf_dir
+):
+    """The band query's build call starts no Spark job and pins no RDD;
+    its signature relation feeds both sides of the band self-join through
+    one exchange, so the executed plan scans ``documents`` once."""
+    import os
+
+    from polygon_algotrading_env_spark.catalog import load_table
+    from polygon_algotrading_env_spark.queries import REGISTRY
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    load_table(spark, sf, "documents")  # the schema inference job
+    sc = spark.sparkContext
+    pinned = set(sc._jsc.getPersistentRDDs().keys())
+    sc.setJobGroup("test-mh-band-build", "test-mh-band-build")
+    try:
+        df = REGISTRY["minhash_md5_band_pairs"].fn(spark, sf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("test-mh-band-build") == []
+    assert set(sc._jsc.getPersistentRDDs().keys()) == pinned
+    assert len(df.collect()) > 0
+    plan = _final_plan(df)
+    assert plan.count("FileScan") == 1, plan
+    assert "documents.parquet" in plan
+    assert "ReusedExchange" in plan, plan

@@ -149,3 +149,48 @@ def test_dot_and_cosine_match_left_to_right_reference(spark):
             den = math.sqrt(aa) * math.sqrt(bb)
             ref_cos = None if den == 0 else ab / den
         assert r["cos"] == ref_cos, r["id"]
+
+
+def test_quantize_int8_matches_per_element_scale_reference(spark, sf_dir):
+    """Binding the scale once per vector gives the codes and scale of the
+    expression that recomputed it per element, on the fixture embeddings,
+    a zero vector, a NULL element and a NULL array."""
+
+    def reference(a):
+        v = F.transform(F.col(a), lambda x: x.cast("double"))
+        mx = F.aggregate(
+            F.transform(v, lambda x: F.abs(x)),
+            F.lit(0.0),
+            lambda acc, x: F.greatest(acc, x),
+        )
+        scale_ = mx / F.lit(127.0)
+        codes = F.transform(
+            v,
+            lambda x: F.when(scale_ == 0, F.lit(0))
+            .otherwise(F.round(x / scale_))
+            .cast("tinyint"),
+        )
+        return F.struct(codes.alias("codes"), scale_.alias("scale"))
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("int").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+    )
+    extra = spark.createDataFrame(
+        [(-1, [0.0, 0.0, 0.0]), (-2, None), (-3, [1.5, None, -3.0])],
+        "id int, v array<double>",
+    )
+    df = emb.unionByName(extra).select(
+        "id",
+        quantize_int8("v").alias("got"),
+        reference("v").alias("ref"),
+    )
+    got, ref = df.schema["got"], df.schema["ref"]
+    assert (got.dataType, got.nullable) == (ref.dataType, ref.nullable)
+    rows = df.collect()
+    assert len(rows) == emb.count() + 3
+    for r in rows:
+        assert r["got"] == r["ref"], r["id"]
+    by_id = {r["id"]: r["got"] for r in rows}
+    assert list(by_id[-1]["codes"]) == [0, 0, 0] and by_id[-1]["scale"] == 0.0
+    assert by_id[-2]["codes"] is None and by_id[-2]["scale"] is None
